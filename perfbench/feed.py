@@ -32,6 +32,17 @@ from collections.abc import Iterable, Mapping
 
 TYPES = ("order", "product", "user")
 
+# Bulk feeds: shares of envelopes that amend or tombstone an earlier id,
+# and the number of ``_design/`` docs among them.
+BULK_AMEND = 0.05
+BULK_TOMB = 0.03
+BULK_DESIGN = 4
+# Feed pages: shares of updates and of new ids; the rest are tombstones.
+PAGE_UPDATE = 0.7
+PAGE_NEW = 0.2
+# Skew of the read mix's id popularity.
+ZIPF_S = 1.1
+
 _STREETS = ("Oak St", "Mill Rd", "High St", "Elm Ave", "Park Ln", "Quay Rd")
 _TOWNS = ("Leeds", "York", "Bath", "Derby", "Ely", "Wells", "Truro", "Ripon")
 _STATUS = ("new", "paid", "shipped", "returned")
@@ -280,47 +291,37 @@ class Feed:
 
     # -- batches -------------------------------------------------------------
 
-    def bulk(
-        self,
-        n: int,
-        amend_frac: float = 0.05,
-        tomb_frac: float = 0.03,
-        design: int = 4,
-        shuffle: bool = True,
-    ) -> list[str]:
-        """``n`` envelopes: mostly new docs of the three types, with
-        amendments and tombstones of earlier ids later in seq, and
-        ``design`` ``_design/`` docs. With ``shuffle`` the lines are
-        written out of seq order, so only seq decides latest-wins."""
+    def bulk(self, n: int) -> list[str]:
+        """``n`` envelopes in seq order: mostly new docs of the three
+        types, with amendments and tombstones of earlier ids later in
+        seq, and ``BULK_DESIGN`` ``_design/`` docs."""
         lines: list[str] = []
-        design_at = set(self.rng.sample(range(n), min(design, n)))
+        design_at = set(self.rng.sample(range(n), min(BULK_DESIGN, n)))
         for i in range(n):
             u = self.rng.random()
             if i in design_at:
                 lines.append(self.design_doc())
-            elif self.created and u < tomb_frac:
+            elif self.created and u < BULK_TOMB:
                 doc_id = self._live_id(skew_newest=False)
                 lines.append(self.tombstone(doc_id) if doc_id else self.new_doc(self._type()))
-            elif self.created and u < tomb_frac + amend_frac:
+            elif self.created and u < BULK_TOMB + BULK_AMEND:
                 doc_id = self._live_id(skew_newest=False)
                 lines.append(self.update(doc_id) if doc_id else self.new_doc(self._type()))
             else:
                 lines.append(self.new_doc(self._type()))
-        if shuffle:
-            self.rng.shuffle(lines)
         return lines
 
-    def page(self, n: int, update: float = 0.7, new: float = 0.2) -> list[str]:
-        """One feed page: ``update`` share of new revisions skewed toward
-        the newest ids (some re-create deleted docs), ``new`` share of
-        new ids, the rest tombstones. Lines stay in seq order."""
+    def page(self, n: int) -> list[str]:
+        """One feed page: ``PAGE_UPDATE`` share of new revisions skewed
+        toward the newest ids (some re-create deleted docs), ``PAGE_NEW``
+        share of new ids, the rest tombstones. Lines stay in seq order."""
         lines: list[str] = []
         for _ in range(n):
             u = self.rng.random()
-            if u < update:
+            if u < PAGE_UPDATE:
                 i = len(self.created) - 1 - int(self.rng.random() ** 3 * len(self.created))
                 lines.append(self.update(self.created[i]))
-            elif u < update + new:
+            elif u < PAGE_UPDATE + PAGE_NEW:
                 lines.append(self.new_doc(self._type()))
             else:
                 doc_id = self._live_id(skew_newest=False)
@@ -329,15 +330,15 @@ class Feed:
 
 
 class Zipf:
-    """Seeded Zipf(s) picks over a fixed population."""
+    """Seeded Zipf(``ZIPF_S``) picks over a fixed population."""
 
-    def __init__(self, rng: random.Random, population: list[str], s: float = 1.1):
+    def __init__(self, rng: random.Random, population: list[str]):
         self.rng = rng
         self.items = list(population)
         rng.shuffle(self.items)  # popularity is independent of age
         cum, acc = [], 0.0
         for rank in range(1, len(self.items) + 1):
-            acc += rank**-s
+            acc += rank**-ZIPF_S
             cum.append(acc)
         self.cum = cum
 

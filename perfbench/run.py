@@ -1,6 +1,6 @@
 """Benchmark entry point: one workload, one fresh SparkSession.
 
-    python3 perfbench/run.py --workload bulk_load --seed 1 --seconds 5 --trace 0
+    python3 perfbench/run.py --workload monitor_sync --seed 1 --seconds 5 --trace 0
 
 Run from the repository root. The last stdout line is one JSON object
 ``{"correct", "attempted", "failed", "metrics"}``: with ``--trace 0``

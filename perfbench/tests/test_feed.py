@@ -11,6 +11,7 @@ from __future__ import annotations
 
 import json
 import os
+import random
 import sys
 
 import pytest
@@ -19,7 +20,7 @@ HERE = os.path.dirname(os.path.abspath(__file__))
 sys.path.insert(0, os.path.dirname(HERE))
 
 import run  # noqa: E402
-from feed import TYPES, Feed, Zipf, canon_row, flatten, table_digest  # noqa: E402
+from feed import BULK_DESIGN, TYPES, Feed, Zipf, canon_row, flatten, table_digest  # noqa: E402
 
 
 def _seq(line: str) -> int:
@@ -89,7 +90,8 @@ def test_model_matches_independent_replay():
 
 def test_line_order_does_not_matter():
     f = Feed(4)
-    lines = f.bulk(2000, shuffle=True)
+    lines = f.bulk(2000)
+    random.Random(0).shuffle(lines)
     assert [_seq(x) for x in lines] != sorted(_seq(x) for x in lines)
     ref = _replay(lines)
     for t in TYPES:
@@ -108,7 +110,8 @@ def test_frozen_schema_drops_and_nulls():
 
 def test_tombstones_and_recreation():
     f = Feed(6)
-    f.bulk(200, tomb_frac=0.0, amend_frac=0.0, design=0)
+    for t in TYPES:
+        f.new_doc(t)
     victim = f.created[0]
     t = victim.split(":")[0]
     f.tombstone(victim)
@@ -119,8 +122,10 @@ def test_tombstones_and_recreation():
 
 def test_design_docs_never_reach_a_table():
     f = Feed(9)
-    f.bulk(500, design=5)
-    assert f.n_design == 5
+    f.bulk(500)
+    for _ in range(5):
+        f.design_doc()
+    assert f.n_design == BULK_DESIGN + 5
     assert not any(i.startswith("_design/") for t in TYPES for i in f.model.rows[t])
 
 
@@ -139,8 +144,6 @@ def test_digest_is_order_insensitive():
 
 
 def test_zipf_is_seeded_and_skewed():
-    import random
-
     ids = [f"order:{i}" for i in range(1000)]
     z1, z2 = Zipf(random.Random(2), ids), Zipf(random.Random(2), ids)
     picks = [z1.pick() for _ in range(2000)]

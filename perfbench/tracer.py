@@ -33,7 +33,6 @@ BOUNDARIES = (
     ("couchwarehouse_spark.warehouse", "merge_batch", "upsert.merge_plan"),
     ("couchwarehouse_spark.warehouse:Warehouse", "_process_batch", "warehouse.process_batch"),
     ("couchwarehouse_spark.operators.upsert:CheckpointStore", "write", "upsert.checkpoint_write"),
-    ("couchwarehouse_spark.streaming.ingest", "_parse_docs", "stream.parse_docs"),
 )
 # Bound by name in many plan modules: patched in every module that
 # holds the original function object.

@@ -1,4 +1,4 @@
-"""The four benchmark workloads.
+"""The two benchmark workloads.
 
 Each workload is a function of a :class:`Run`. It sets up (timed into
 ``setup_s``), runs its measured ops with one closed-loop client, then
@@ -40,15 +40,12 @@ REGISTRY_ENTRIES = (
     "salted_skew_aggregate", "repetition_census",
 )
 
-BULK_DOCS = 20_000
-BULK_WARM_DOCS = 1_000
-MONITOR_PRELOAD = 3_000
+MONITOR_PRELOAD = 1_000
 MONITOR_PAGE = 1_000
-MONITOR_WARM_PAGES = 1
-MONITOR_PAGES = 5
-SERVE_PRELOAD = 5_000
+MONITOR_PAGES = 4
+SERVE_PRELOAD = 2_000
 SERVE_WRITE = 200
-SERVE_READS_PER_WRITE = 15
+SERVE_READS_PER_WRITE = 20
 SERVE_SQL = (
     ("order", "SELECT status AS k, count(*) AS n, "
      "sum(CAST(round(total * 100) AS BIGINT)) AS s FROM shop_order GROUP BY status"),
@@ -130,45 +127,10 @@ class Run:
                 )
 
 
-def _warehouse(run: Run, name: str):
+def _warehouse(run: Run):
     from couchwarehouse_spark.warehouse import Warehouse
 
-    path = run.path(name)
-    return Warehouse(run.spark, path, "shop", split="type")
-
-
-# -- bulk_load ---------------------------------------------------------------
-
-
-def bulk_load(run: Run) -> dict:
-    """Spool one schemaless feed into fresh split warehouses, repeatedly."""
-    with run.setup():
-        feed = Feed(run.seed)
-        path = run.path("feed.jsonl")
-        write_lines(path, feed.bulk(BULK_DOCS))
-        warm = Feed(run.seed + 1)
-        warm_path = run.path("warm.jsonl")
-        write_lines(warm_path, warm.bulk(BULK_WARM_DOCS))
-        _warehouse(run, "warm").spool(warm_path)
-    whs = []
-    start = time.perf_counter()
-    while len(whs) < 3 or time.perf_counter() - start < run.seconds:
-        wh = _warehouse(run, f"wh{len(whs)}")
-        run.attempted += 1
-        with run.op("spool", changes=BULK_DOCS):
-            wh.spool(path)
-        whs.append(wh)
-    for i, wh in enumerate(whs):
-        run.check_tables(wh, feed.model, f"spool {i}", f"spool {i}")
-    run.warehouses = [wh.warehouse_dir for wh in whs]
-    spools = [o["dt"] for o in run.ops]
-    return {
-        "load_docs_per_s": BULK_DOCS / statistics.median(spools),
-        "spool_p50_s": statistics.median(spools),
-        "spool_p75_s": quantile(spools, 0.75),
-        "docs_per_spool": BULK_DOCS,
-        "spools": len(spools),
-    }
+    return Warehouse(run.spark, run.path("wh"), "shop", split="type")
 
 
 # -- monitor_sync ------------------------------------------------------------
@@ -182,18 +144,17 @@ def monitor_sync(run: Run) -> dict:
     """Drain a backlog of feed pages, one micro-batch per page."""
     from couchwarehouse_spark.streaming.ingest import monitor_warehouse
 
-    pages = MONITOR_WARM_PAGES + MONITOR_PAGES
     with run.setup():
         feed = Feed(run.seed)
         land = run.path("landing")
         os.makedirs(land)
-        batches = [feed.bulk(MONITOR_PRELOAD, shuffle=False)]
-        batches += [feed.page(MONITOR_PAGE) for _ in range(pages)]
+        batches = [feed.bulk(MONITOR_PRELOAD)]
+        batches += [feed.page(MONITOR_PAGE) for _ in range(MONITOR_PAGES)]
         for i, lines in enumerate(batches):
             p = os.path.join(land, f"page-{i:05d}.jsonl")
             write_lines(p, lines)
             os.utime(p, (1_000_000_000 + i, 1_000_000_000 + i))  # drain order
-        wh = _warehouse(run, "wh")
+        wh = _warehouse(run)
     batch_ids = [f"batch {i}" for i in range(len(batches))]
     start = time.perf_counter()
     query = monitor_warehouse(
@@ -205,10 +166,12 @@ def monitor_sync(run: Run) -> dict:
         run.fail(batch_ids, f"stream: {type(exc).__name__}: {exc}")
     drain_s = time.perf_counter() - start
     progress = [p for p in query.recentProgress if p.numInputRows > 0]
-    warm = 1 + MONITOR_WARM_PAGES  # the preload batch, then warm-up pages
-    for p in progress[:warm]:
-        run.setup_s += p.durationMs["triggerExecution"] / 1e3
-    for p in progress[warm:]:
+    # The preload batch is the warm-up: it runs cold, into a fresh table.
+    # A separate warm-up page cost about 8 s a run, and the first page
+    # after it still ran about a third slower than the rest.
+    if progress:
+        run.setup_s += progress[0].durationMs["triggerExecution"] / 1e3
+    for p in progress[1:]:
         t0 = _epoch(p.timestamp)
         dt = p.durationMs["triggerExecution"] / 1e3
         run.ops.append(
@@ -216,7 +179,7 @@ def monitor_sync(run: Run) -> dict:
         )
     run.trace["progress"] = [
         {"rows": p.numInputRows, "t0": _epoch(p.timestamp), **p.durationMs}
-        for p in progress[warm:]
+        for p in progress[1:]
     ]
     run.attempted = len(batches)
     if len(progress) != len(batches):
@@ -226,8 +189,9 @@ def monitor_sync(run: Run) -> dict:
     lat = [o["dt"] for o in run.ops]
     if not lat:
         raise RuntimeError("no measured micro-batches")
+    window = run.ops[-1]["t1"] - run.ops[0]["t0"]
     return {
-        "sync_changes_per_s": MONITOR_PAGE / statistics.median(lat),
+        "sync_changes_per_s": MONITOR_PAGE * len(lat) / window,
         "sync_batch_p50_s": statistics.median(lat),
         "sync_batch_p75_s": quantile(lat, 0.75),
         "drain_s": drain_s,
@@ -253,32 +217,39 @@ def _expected_agg(model, doc_type: str) -> dict:
 
 
 def serve_mixed(run: Run) -> dict:
-    """Zipf point lookups and group-by SQL, with a small spool after
-    every fifteen reads."""
-    with run.setup():
-        feed = Feed(run.seed)
-        pre = run.path("preload.jsonl")
-        write_lines(pre, feed.bulk(SERVE_PRELOAD, shuffle=False))
-        wh = _warehouse(run, "wh")
-        wh.spool(pre)
-        zipf = Zipf(random.Random(run.seed), feed.created)
+    """One pass over the registry entries, then Zipf point lookups and
+    group-by SQL with a small spool between each block of reads and the
+    next. The registry pass runs first so that the reads find a warm
+    JVM: read straight after the preload, the first lookups ran up to
+    twice as slow as the rest."""
+    import couchwarehouse_spark.plans.all  # noqa: F401  (populates the registry)
+
     lookups, sqls, writes = [], [], []
     scanned, phases = [], []
-    n_sql = n_write = 0
-    start = time.perf_counter()
-    while n_write < 2 or time.perf_counter() - start < run.seconds:
-        for k in range(SERVE_READS_PER_WRITE):
+    write_ids = []
+
+    def write() -> None:
+        run.attempted += 1
+        write_ids.append(f"write {run.attempted}")
+        path = run.path(f"write-{len(write_ids):05d}.jsonl")
+        write_lines(path, feed.page(SERVE_WRITE))
+        with run.op("write", changes=SERVE_WRITE) as rec:
+            wh.spool(path)
+        writes.append(rec["dt"])
+
+    def reads(n: int) -> None:
+        for k in range(n):
             run.attempted += 1
+            op_id = f"read {run.attempted}"
             if k % 5 == 4:
-                doc_type, sql = SERVE_SQL[n_sql % len(SERVE_SQL)]
-                n_sql += 1
+                doc_type, sql = SERVE_SQL[len(sqls) % len(SERVE_SQL)]
                 with run.op("sql") as rec:
                     df = wh.query(sql)
                     got = df.collect()
                 sqls.append(rec["dt"])
                 want = _expected_agg(feed.model, doc_type)
                 if {r["k"]: (r["n"], r["s"]) for r in got} != want:
-                    run.fail(f"sql {n_sql}", f"sql {doc_type}: result differs from the model")
+                    run.fail(op_id, f"sql {doc_type}: result differs from the model")
             else:
                 doc_id = zipf.pick()
                 doc_type = doc_id.split(":", 1)[0]
@@ -290,21 +261,29 @@ def serve_mixed(run: Run) -> dict:
                 row = feed.model.rows[doc_type].get(doc_id)
                 want = [canon_row(row, cols)] if row is not None else []
                 if [canon_row(r.asDict(), cols) for r in got] != want:
-                    run.fail(f"lookup {len(lookups)}", f"lookup {doc_id}: row differs from the model")
+                    run.fail(op_id, f"lookup {doc_id}: row differs from the model")
             if run.tracer:
                 phases.append(catalyst_phases(df))
                 if rec["kind"] == "lookup":
                     scanned.append(files_read(df))
-        n_write += 1
-        path = run.path(f"write-{n_write:05d}.jsonl")
-        write_lines(path, feed.page(SERVE_WRITE))
-        run.attempted += 1
-        with run.op("write", changes=SERVE_WRITE) as rec:
-            wh.spool(path)
-        writes.append(rec["dt"])
-    window = time.perf_counter() - start
-    write_ids = [f"write {i}" for i in range(1, n_write + 1)]
+
+    with run.setup():
+        feed = Feed(run.seed)
+        pre = run.path("preload.jsonl")
+        write_lines(pre, feed.bulk(SERVE_PRELOAD))
+        wh = _warehouse(run)
+        wh.spool(pre)
+        zipf = Zipf(random.Random(run.seed), feed.created)
+    start = time.perf_counter()
+    results = _registry_pass(run)
+    registry_s = time.perf_counter() - start
+    reads(SERVE_READS_PER_WRITE)
+    while not writes or time.perf_counter() - start < run.seconds:
+        write()
+        reads(SERVE_READS_PER_WRITE)
+    end = time.perf_counter()
     run.check_tables(wh, feed.model, write_ids, "serve final state")
+    _check_registry(run, results)
     run.warehouses = [wh.warehouse_dir]
     run.trace.update(phases=phases, files_read=scanned)
     return {
@@ -313,14 +292,16 @@ def serve_mixed(run: Run) -> dict:
         "lookup_p90_s": quantile(lookups, 0.90),
         "sql_p50_s": statistics.median(sqls),
         "write_p50_s": statistics.median(writes),
-        "client_ops_per_s": len(run.ops) / window,
+        "registry_pass_s": registry_s,
+        "client_ops_per_s": len(run.ops) / (end - start),
         "lookups": len(lookups),
         "queries": len(sqls),
         "writes": len(writes),
+        "entry_s": {o["entry"]: o["dt"] for o in run.ops if o["kind"] == "entry"},
     }
 
 
-# -- registry_mix ------------------------------------------------------------
+# -- registry entries (run by serve_mixed) -----------------------------------
 
 
 def _frames_differ(a, b) -> str | None:
@@ -365,33 +346,16 @@ def _frames_differ(a, b) -> str | None:
     return None
 
 
-def _warm_up(spark) -> None:
-    """A neutral warm-up shaped unlike every entry: the JVM's first
-    parquet scan, hash aggregate, shuffle and join."""
-    spark.range(1_000_000).selectExpr("sum(id)").collect()
-    li = spark.read.parquet(os.path.join(REGISTRY_DATA, "lineitem.parquet"))
-    od = spark.read.parquet(os.path.join(REGISTRY_DATA, "orders.parquet"))
-    (
-        li.join(od, li.l_orderkey == od.o_orderkey)
-        .groupBy("l_linestatus", "o_orderstatus")
-        .agg({"l_quantity": "avg", "l_tax": "sum"})
-        .write.format("noop").mode("overwrite").save()
-    )
-
-
-def registry_mix(run: Run) -> dict:
-    """One timed pass over fifteen registry entries, one per plan
-    module. Each entry is built and its result collected to the
-    client, then checked against the entry's DuckDB oracle."""
-    import couchwarehouse_spark.plans.all  # noqa: F401  (populates the registry)
-    from couchwarehouse_spark.plans import ORACLES, QUERIES
+def _registry_pass(run: Run) -> dict:
+    """One pass over the registry entries, one per plan module, in an
+    order set by the seed. Each entry is built and its result collected
+    to the client. An entry that raises counts as failed and the pass
+    goes on."""
+    from couchwarehouse_spark.plans import QUERIES
 
     order = list(REGISTRY_ENTRIES)
     random.Random(run.seed).shuffle(order)
-    with run.setup():
-        _warm_up(run.spark)
     results = {}
-    start = time.perf_counter()
     for name in order:
         run.attempted += 1
         try:
@@ -404,8 +368,13 @@ def registry_mix(run: Run) -> dict:
         except Exception as exc:
             run.fail(name, f"{name}: {type(exc).__name__}: {exc}")
         run.spark.catalog.clearCache()
-    pass_s = time.perf_counter() - start
+    return results
+
+
+def _check_registry(run: Run, results: dict) -> None:
+    """Each collected result against its entry's DuckDB oracle."""
     import duckdb
+    from couchwarehouse_spark.plans import ORACLES
 
     con = duckdb.connect()
     try:
@@ -420,32 +389,18 @@ def registry_mix(run: Run) -> dict:
                 run.fail(name, f"{name}: {why}")
     finally:
         con.close()
-    entries = [o["dt"] for o in run.ops]
-    return {
-        "registry_pass_s": pass_s,
-        "entries_per_s": len(entries) / pass_s,
-        "entry_p50_s": statistics.median(entries),
-        "entry_p75_s": quantile(entries, 0.75),
-        "entry_s": {o["entry"]: o["dt"] for o in run.ops},
-    }
 
 
 WORKLOADS = {
-    "bulk_load": bulk_load,
-    "monitor_sync": monitor_sync,
     "serve_mixed": serve_mixed,
-    "registry_mix": registry_mix,
+    "monitor_sync": monitor_sync,
 }
 
 # Generic end-to-end slots gated by BENCHMARK.json, filled per workload
 # from its named metrics: (throughput, op median, op tail).
 PRIMARY = {
-    "bulk_load": ("load_docs_per_s", "spool_p50_s", "spool_p75_s"),
     "monitor_sync": ("sync_changes_per_s", "sync_batch_p50_s", "sync_batch_p75_s"),
     "serve_mixed": ("client_ops_per_s", "lookup_p50_s", "lookup_p75_s"),
-    # One pass per run: the seed reorders the entries, which moves JIT
-    # warm-up cost between them, so per-entry percentiles are not steady.
-    "registry_mix": ("entries_per_s", "registry_pass_s", "registry_pass_s"),
 }
 
 
