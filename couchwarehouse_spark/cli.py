@@ -490,10 +490,13 @@ def main(argv: list[str] | None = None) -> int:
         # path for the reference's per-change DELETE (lib/sqlite.js:
         # 95-98). Without it a re-run against an existing sqlite file
         # after deletions would leave stale rows queryable forever.
-        from couchwarehouse_spark.sinks.sqlite import SQLiteSink
+        import sqlite3
 
-        sink = SQLiteSink(args.sqlite)
+        from couchwarehouse_spark.sinks.dialects import DialectSink
+
+        con = sqlite3.connect(args.sqlite)
         try:
+            sink = DialectSink(con, "sqlite")
             for doc_type, schema in wh.schemas.items():
                 name = wh.table_name(doc_type)
                 full = {"id": "string", **schema}
@@ -511,7 +514,7 @@ def main(argv: list[str] | None = None) -> int:
                 if not args.quiet:
                     print(f"couchwarehouse: {n} rows -> sqlite table {name}")
         finally:
-            sink.close()
+            con.close()
     if args.es:
         # One-shot bulk index of the merged state (the reference's
         # elasticsearch databaseType, lib/elasticsearch.js:16-44),
@@ -544,7 +547,8 @@ def main(argv: list[str] | None = None) -> int:
         # pass (deleted rows simply aren't in the state), and
         # createTableColumnTypes carries the dialect DDL. Dialect-
         # exact per-row upsert/delete statements live in
-        # sinks.dialects for follower-style incremental egress.
+        # sinks.dialects.DialectSink for follower-style incremental
+        # egress.
         from couchwarehouse_spark.sinks import jdbc as jdbc_sink
 
         for doc_type, schema in wh.schemas.items():

@@ -134,7 +134,7 @@ def cdc_payload(
     """Join a ``snapshot_diff`` back to the new state: one row per
     CHANGED key carrying the new column values (NULLs for deletes)
     plus boolean ``_cw_deleted`` — exactly the shape both live sinks
-    apply directly (``SQLiteSink.insert_bulk(deleted_col=...)``
+    apply directly (``DialectSink.insert_bulk(deleted_col=...)``
     REPLACE/DELETEs it; ``push_bulk_http(deleted_col=...)`` turns it
     into index/delete bulk actions). This is the incremental follow:
     a 0.1%-churn batch ships 0.1% of the state, not a re-export.

@@ -22,6 +22,8 @@ from pyspark.sql import functions as F
 from couchwarehouse_spark.catalog import load_table
 from couchwarehouse_spark.plans.registry import query_scoped_shuffle
 from couchwarehouse_spark.plans.sizing import state_partitions
+from couchwarehouse_spark.streaming.joins import interval_join_streams
+from couchwarehouse_spark.streaming.stateful import dedup_late_events
 
 # Streaming state partitions are FIXED at a query's first run from
 # spark.sql.shuffle.partitions and each partition is a per-batch
@@ -221,7 +223,7 @@ def streaming_dedup_e2e(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 SJ_ATTR_HOURS = 1  # view→purchase attribution window (strict >, inclusive ≤)
-SJ_WM_DELAY = "30 minutes"  # watermark delay on both join sides
+SJ_WM_SECONDS = 30 * 60  # watermark delay on both join sides
 
 
 def _stage_by_event_time(
@@ -269,6 +271,74 @@ def _stage_by_event_time(
     shutil.rmtree(tmp, ignore_errors=True)
 
 
+def _view_purchase_join(
+    spark: SparkSession, sf_dir: str, prefix: str, how: str
+) -> DataFrame:
+    """The one body of the three view→purchase interval-join entries:
+    stage views and purchases as two {SW_STAGE_FILES}-file
+    event-time-ordered parquet streams, join each view to every
+    purchase by the same user in ``(view_ts, view_ts + {SJ_ATTR_HOURS}h]``
+    under a {SJ_WM_SECONDS}s watermark on both sides
+    (``interval_join_streams`` with join type ``how``), drain with
+    ``maxFilesPerTrigger={SW_FILES_PER_TRIGGER}`` into an append-mode
+    memory sink and return that table (columns v_user, view_ts,
+    p_user, purchase_ts, p_value)."""
+    tag = hashlib.md5(sf_dir.encode()).hexdigest()[:8]
+    base = os.path.join(tempfile.gettempdir(), f"{prefix}_{tag}")
+    stage_v = os.path.join(base, "views")
+    stage_p = os.path.join(base, "purch")
+    ckpt = os.path.join(base, "ckpt")
+    shutil.rmtree(base, ignore_errors=True)
+
+    ev = load_table(spark, sf_dir, "events").select("ts", "user_id", "event_type", "value")
+    _stage_by_event_time(
+        ev.filter(F.col("event_type") == "view").drop("event_type"),
+        stage_v, SW_STAGE_FILES,
+    )
+    _stage_by_event_time(
+        ev.filter(F.col("event_type") == "purchase").drop("event_type"),
+        stage_p, SW_STAGE_FILES,
+    )
+
+    def read(stage: str) -> DataFrame:
+        return (
+            spark.readStream.schema("ts timestamp, user_id long, value double")
+            .option("maxFilesPerTrigger", SW_FILES_PER_TRIGGER)
+            .parquet(stage)
+        )
+
+    views = read(stage_v).select(
+        F.col("user_id").alias("v_user"), F.col("ts").alias("view_ts")
+    )
+    purchases = read(stage_p).select(
+        F.col("user_id").alias("p_user"),
+        F.col("ts").alias("purchase_ts"),
+        F.col("value").alias("p_value"),
+    )
+    joined = interval_join_streams(
+        views,
+        purchases,
+        key="v_user",
+        right_key="p_user",
+        left_ts="view_ts",
+        right_ts="purchase_ts",
+        watermark=f"{SJ_WM_SECONDS} seconds",
+        interval=f"{SJ_ATTR_HOURS} hours",
+        how=how,
+    )
+    qname = f"{prefix}_out_{tag}"
+    q = (
+        joined.writeStream.format("memory")
+        .queryName(qname)
+        .outputMode("append")
+        .option("checkpointLocation", ckpt)
+        .trigger(availableNow=True)
+        .start()
+    )
+    q.awaitTermination()
+    return spark.table(qname)
+
+
 @query(
     "streaming_interval_join_e2e",
     oracle=f"""
@@ -292,7 +362,7 @@ def streaming_interval_join_e2e(spark: SparkSession, sf_dir: str) -> DataFrame:
     streams in event-time order, and each view joins every purchase by
     the same user within the following {SJ_ATTR_HOURS}h — the
     canonical streaming attribution shape. Both sides carry a
-    {SJ_WM_DELAY} watermark and the join condition carries the time
+    {SJ_WM_SECONDS}s watermark and the join condition carries the time
     bound, so Spark's symmetric hash join evicts buffered rows the
     watermark proves can no longer match — bounded state, which is the
     entire point of the interval form at 100 TB (an unbounded
@@ -313,64 +383,8 @@ def streaming_interval_join_e2e(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale: state is keyed by user_id and bounded by watermark horizon
     × per-user event rate; the stage write is harness, not operator.
     """
-    tag = hashlib.md5(sf_dir.encode()).hexdigest()[:8]
-    base = os.path.join(tempfile.gettempdir(), f"cw_sjoin_{tag}")
-    stage_v = os.path.join(base, "views")
-    stage_p = os.path.join(base, "purch")
-    ckpt = os.path.join(base, "ckpt")
-    shutil.rmtree(base, ignore_errors=True)
-
-    ev = load_table(spark, sf_dir, "events").select("ts", "user_id", "event_type", "value")
-    _stage_by_event_time(
-        ev.filter(F.col("event_type") == "view").drop("event_type"),
-        stage_v, SW_STAGE_FILES,
-    )
-    _stage_by_event_time(
-        ev.filter(F.col("event_type") == "purchase").drop("event_type"),
-        stage_p, SW_STAGE_FILES,
-    )
-
-    schema = "ts timestamp, user_id long, value double"
-    views = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", SW_FILES_PER_TRIGGER)
-        .parquet(stage_v)
-        .withWatermark("ts", SJ_WM_DELAY)
-        .select(
-            F.col("user_id").alias("v_user"), F.col("ts").alias("view_ts")
-        )
-    )
-    purchases = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", SW_FILES_PER_TRIGGER)
-        .parquet(stage_p)
-        .withWatermark("ts", SJ_WM_DELAY)
-        .select(
-            F.col("user_id").alias("p_user"),
-            F.col("ts").alias("purchase_ts"),
-            F.col("value").alias("p_value"),
-        )
-    )
-    joined = views.join(
-        purchases,
-        F.expr(
-            f"""v_user = p_user
-            AND purchase_ts > view_ts
-            AND purchase_ts <= view_ts + INTERVAL {SJ_ATTR_HOURS} HOUR"""
-        ),
-    )
-    qname = f"cw_sjoin_out_{tag}"
-    q = (
-        joined.writeStream.format("memory")
-        .queryName(qname)
-        .outputMode("append")
-        .option("checkpointLocation", ckpt)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
     return (
-        spark.table(qname)
+        _view_purchase_join(spark, sf_dir, "cw_sjoin", "inner")
         .groupBy(F.col("v_user").alias("user_id"))
         .agg(
             F.count("*").cast("long").alias("n_attributed"),
@@ -652,6 +666,10 @@ from couchwarehouse_spark.plans.warehouse_e2e import (  # noqa: E402
     AMEND,
     DELETE,
     FEED_DOC_DDL,
+    amended_doc,
+    envelope,
+    order_changes,
+    order_doc,
 )
 from couchwarehouse_spark.streaming.ingest import monitor_warehouse  # noqa: E402
 from couchwarehouse_spark.warehouse import Warehouse  # noqa: E402
@@ -698,49 +716,9 @@ def warehouse_streaming_ingest_e2e(spark: SparkSession, sf_dir: str) -> DataFram
     orders = load_table(spark, sf_dir, "orders").filter(
         F.col("o_orderkey") % WI_SUBSET == 0
     )
-    doc = F.struct(
-        F.concat(F.lit("order"), F.col("o_orderkey").cast("string")).alias("_id"),
-        F.lit("1-x").alias("_rev"),
-        F.col("o_orderstatus").alias("status"),
-        F.col("o_totalprice").alias("total"),
-        F.struct(F.col("o_custkey").alias("id")).alias("customer"),
+    feed = orders.select(F.explode(order_changes()).alias("e")).select(
+        "e.sortseq", "e.value"
     )
-    amended = F.struct(
-        doc["_id"].alias("_id"),
-        F.lit("2-x").alias("_rev"),
-        F.lit("amended").alias("status"),
-        doc["total"].alias("total"),
-        doc["customer"].alias("customer"),
-    )
-
-    def env(seq_col, doc_col, deleted: bool):
-        fields = [
-            F.concat(seq_col.cast("string"), F.lit("-seq")).alias("seq"),
-            F.concat(F.lit("order"), F.col("o_orderkey").cast("string")).alias("id"),
-        ]
-        if deleted:
-            fields.append(F.lit(True).alias("deleted"))
-        if doc_col is not None:
-            fields.append(doc_col.alias("doc"))
-        return F.struct(
-            seq_col.cast("long").alias("sortseq"),
-            F.to_json(F.struct(*fields)).alias("value"),
-        )
-
-    envs = F.array(
-        env(F.col("o_orderkey"), doc, False),
-        F.when(
-            F.col("o_orderkey") % AMEND == 0,
-            env(F.col("o_orderkey") + F.lit(1_000_000_000), amended, False),
-        ),
-        F.when(
-            F.col("o_orderkey") % DELETE == 0,
-            env(F.col("o_orderkey") + F.lit(2_000_000_000), None, True),
-        ),
-    )
-    feed = orders.select(
-        F.explode(F.filter(envs, lambda x: x.isNotNull())).alias("e")
-    ).select("e.sortseq", "e.value")
     # Seq-ordered landing files: ascending range partitions land in
     # ascending part-file NAMES — but FileStreamSource orders by
     # MODIFICATION TIME, and the parallel write finishes files in
@@ -792,9 +770,6 @@ def warehouse_streaming_ingest_e2e(spark: SparkSession, sf_dir: str) -> DataFram
     )
 
 
-SJL_WM_SECONDS = 30 * 60  # left-join watermark delay (both sides)
-
-
 @query(
     "streaming_left_interval_join_e2e",
     oracle=f"""
@@ -812,7 +787,7 @@ SJL_WM_SECONDS = 30 * 60  # left-join watermark delay (both sides)
       SELECT least((SELECT max(ts) FROM events WHERE event_type = 'view'),
                    (SELECT max(ts) FROM events
                     WHERE event_type = 'purchase'))
-             - INTERVAL {SJL_WM_SECONDS} SECOND AS w
+             - INTERVAL {SJ_WM_SECONDS} SECOND AS w
     ),
     matched AS (
       SELECT v.user_id, v.view_ts, p.purchase_ts
@@ -853,7 +828,7 @@ def streaming_left_interval_join_e2e(spark: SparkSession, sf_dir: str) -> DataFr
     view_ts + {SJ_ATTR_HOURS}h), and views whose window is still open
     when the stream ends are held in state and never emitted. The
     DuckDB oracle states that exact contract — including the final
-    watermark horizon max(ts) − {SJL_WM_SECONDS}s — so the hash match
+    watermark horizon max(ts) − {SJ_WM_SECONDS}s — so the hash match
     certifies both the join results AND the emission semantics, the
     part of outer streaming joins every engine documents and few
     tests pin.
@@ -867,63 +842,8 @@ def streaming_left_interval_join_e2e(spark: SparkSession, sf_dir: str) -> DataFr
     attribution-with-fallback shape ("did the view convert within an
     hour, or do we bill it as unconverted?").
     """
-    tag = hashlib.md5(sf_dir.encode()).hexdigest()[:8]
-    base = os.path.join(tempfile.gettempdir(), f"cw_sljoin_{tag}")
-    stage_v = os.path.join(base, "views")
-    stage_p = os.path.join(base, "purch")
-    ckpt = os.path.join(base, "ckpt")
-    shutil.rmtree(base, ignore_errors=True)
-
-    ev = load_table(spark, sf_dir, "events").select(
-        "ts", "user_id", "event_type", "value"
-    )
-    _stage_by_event_time(
-        ev.filter(F.col("event_type") == "view").drop("event_type"),
-        stage_v, SW_STAGE_FILES,
-    )
-    _stage_by_event_time(
-        ev.filter(F.col("event_type") == "purchase").drop("event_type"),
-        stage_p, SW_STAGE_FILES,
-    )
-    schema = "ts timestamp, user_id long, value double"
-    views = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", SW_FILES_PER_TRIGGER)
-        .parquet(stage_v)
-        .withWatermark("ts", f"{SJL_WM_SECONDS} seconds")
-        .select(F.col("user_id").alias("v_user"), F.col("ts").alias("view_ts"))
-    )
-    purchases = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", SW_FILES_PER_TRIGGER)
-        .parquet(stage_p)
-        .withWatermark("ts", f"{SJL_WM_SECONDS} seconds")
-        .select(
-            F.col("user_id").alias("p_user"),
-            F.col("ts").alias("purchase_ts"),
-        )
-    )
-    joined = views.join(
-        purchases,
-        F.expr(
-            f"""v_user = p_user
-            AND purchase_ts > view_ts
-            AND purchase_ts <= view_ts + INTERVAL {SJ_ATTR_HOURS} HOUR"""
-        ),
-        "left_outer",
-    )
-    qname = f"cw_sljoin_out_{tag}"
-    q = (
-        joined.writeStream.format("memory")
-        .queryName(qname)
-        .outputMode("append")
-        .option("checkpointLocation", ckpt)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
     return (
-        spark.table(qname)
+        _view_purchase_join(spark, sf_dir, "cw_sljoin", "left_outer")
         .groupBy(F.col("v_user").alias("user_id"))
         .agg(
             F.count("*").cast("long").alias("n_rows"),
@@ -992,49 +912,9 @@ def streaming_restart_resume_e2e(spark: SparkSession, sf_dir: str) -> DataFrame:
     orders = load_table(spark, sf_dir, "orders").filter(
         F.col("o_orderkey") % RR_SUBSET == 0
     )
-    doc = F.struct(
-        F.concat(F.lit("order"), F.col("o_orderkey").cast("string")).alias("_id"),
-        F.lit("1-x").alias("_rev"),
-        F.col("o_orderstatus").alias("status"),
-        F.col("o_totalprice").alias("total"),
-        F.struct(F.col("o_custkey").alias("id")).alias("customer"),
+    feed = orders.select(F.explode(order_changes()).alias("e")).select(
+        "e.sortseq", "e.value"
     )
-    amended = F.struct(
-        doc["_id"].alias("_id"),
-        F.lit("2-x").alias("_rev"),
-        F.lit("amended").alias("status"),
-        doc["total"].alias("total"),
-        doc["customer"].alias("customer"),
-    )
-
-    def env(seq_col, doc_col, deleted: bool):
-        fields = [
-            F.concat(seq_col.cast("string"), F.lit("-seq")).alias("seq"),
-            F.concat(F.lit("order"), F.col("o_orderkey").cast("string")).alias("id"),
-        ]
-        if deleted:
-            fields.append(F.lit(True).alias("deleted"))
-        if doc_col is not None:
-            fields.append(doc_col.alias("doc"))
-        return F.struct(
-            seq_col.cast("long").alias("sortseq"),
-            F.to_json(F.struct(*fields)).alias("value"),
-        )
-
-    envs = F.array(
-        env(F.col("o_orderkey"), doc, False),
-        F.when(
-            F.col("o_orderkey") % AMEND == 0,
-            env(F.col("o_orderkey") + F.lit(1_000_000_000), amended, False),
-        ),
-        F.when(
-            F.col("o_orderkey") % DELETE == 0,
-            env(F.col("o_orderkey") + F.lit(2_000_000_000), None, True),
-        ),
-    )
-    feed = orders.select(
-        F.explode(F.filter(envs, lambda x: x.isNotNull())).alias("e")
-    ).select("e.sortseq", "e.value")
     stage_tmp = os.path.join(base, "feed_stage")
     (
         feed.repartitionByRange(RR_STAGE_FILES, "sortseq")
@@ -1118,9 +998,10 @@ WD_PASS2_BASE = "2026-01-21 00:00:00"  # re-stamped retries, beyond horizon
     """,
 )
 def streaming_dedup_watermark_e2e(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """``dropDuplicatesWithinWatermark`` under the oracle gate — the
-    BOUNDED-STATE dedup production streams actually run (plain
-    ``dropDuplicates`` state grows forever at 100 TB; the watermarked
+    """Watermarked dedup (``streaming.stateful.dedup_late_events``,
+    keyed on ``doc_id``) under the oracle gate — the BOUNDED-STATE
+    dedup production streams actually run (plain ``dropDuplicates``
+    state grows forever at 100 TB; the watermarked
     form ages each key out once the watermark passes its event time +
     delay). Three deterministic arrival waves make both sides of the
     horizon contract observable in the final counts:
@@ -1200,14 +1081,12 @@ def streaming_dedup_watermark_e2e(spark: SparkSession, sf_dir: str) -> DataFrame
     _stage_by_event_time(fillers, stage, 4, mtime_base=t0 + 1_000)
     _stage_by_event_time(pass2, stage, SW_STAGE_FILES, mtime_base=t0 + 2_000)
 
-    stream = (
-        spark.readStream.schema(
-            "doc_id long, source string, n_chars long, ts timestamp"
-        )
+    stream = dedup_late_events(
+        spark.readStream.schema("doc_id long, source string, n_chars long, ts timestamp")
         .option("maxFilesPerTrigger", SW_FILES_PER_TRIGGER)
-        .parquet(stage)
-        .withWatermark("ts", WD_DELAY)
-        .dropDuplicatesWithinWatermark(["doc_id"])
+        .parquet(stage),
+        WD_DELAY,
+        key="doc_id",
     )
     qname = f"cw_wmdedup_out_{tag}"
     q = (
@@ -1362,54 +1241,11 @@ def concurrent_compact_ingest_e2e(spark: SparkSession, sf_dir: str) -> DataFrame
         F.col("o_orderkey") % CI_SUBSET == 0
     )
 
-    def doc(prefix: str, rev: str, status_col):
-        return F.struct(
-            F.concat(F.lit(prefix), F.col("o_orderkey").cast("string")).alias("_id"),
-            F.lit(rev).alias("_rev"),
-            status_col.alias("status"),
-            F.col("o_totalprice").alias("total"),
-            F.struct(F.col("o_custkey").alias("id")).alias("customer"),
-        )
-
-    def env(seq_col, id_prefix: str, doc_col, deleted: bool):
-        fields = [
-            F.concat(seq_col.cast("string"), F.lit("-seq")).alias("seq"),
-            F.concat(F.lit(id_prefix), F.col("o_orderkey").cast("string")).alias("id"),
-        ]
-        if deleted:
-            fields.append(F.lit(True).alias("deleted"))
-        if doc_col is not None:
-            fields.append(doc_col.alias("doc"))
-        return F.struct(
-            seq_col.cast("long").alias("sortseq"),
-            F.to_json(F.struct(*fields)).alias("value"),
-        )
-
     key = F.col("o_orderkey")
-    amend_or_del = F.array(
-        F.when(
-            key % AMEND == 0,
-            env(key + F.lit(1_000_000_000), "order",
-                doc("order", "2-x", F.lit("amended")), False),
-        ),
-        F.when(
-            key % DELETE == 0,
-            env(key + F.lit(2_000_000_000), "order", None, True),
-        ),
-    )
     waves = [
-        orders.select(
-            env(key, "order", doc("order", "1-x", F.col("o_orderstatus")), False)
-            .alias("e")
-        ),
-        orders.select(
-            env(key + F.lit(500_000_000), "xorder",
-                doc("xorder", "1-x", F.col("o_orderstatus")), False)
-            .alias("e")
-        ),
-        orders.select(
-            F.explode(F.filter(amend_or_del, lambda x: x.isNotNull())).alias("e")
-        ),
+        orders.select(envelope(0, "order", order_doc("order")).alias("e")),
+        orders.select(envelope(500_000_000, "xorder", order_doc("xorder")).alias("e")),
+        orders.select(F.explode(order_changes()).alias("e")).filter("e.phase = 2"),
     ]
     # Seq-ordered landing files with monotonic mtimes (the tailer
     # discipline). Each wave stages SEPARATELY so its files carry a
@@ -1467,8 +1303,9 @@ def concurrent_compact_ingest_e2e(spark: SparkSession, sf_dir: str) -> DataFrame
     # commits under its feet, the planner's pinned commit collides.
     stale = wh._load_manifest(path)
     xwave_dir = os.path.join(base_dir, "feed_x")
-    xdoc = doc("xorder", "2-x", F.lit("zamended"))
-    xenv = env(key + F.lit(3_000_000_000), "xorder", xdoc, False)
+    xenv = envelope(
+        3_000_000_000, "xorder", amended_doc(order_doc("xorder"), "zamended")
+    )
     (
         orders.filter(key % CI_XAMEND == 0)
         .select(xenv.alias("e"))
@@ -1512,7 +1349,7 @@ def concurrent_compact_ingest_e2e(spark: SparkSession, sf_dir: str) -> DataFrame
       SELECT least((SELECT max(ts) FROM events WHERE event_type = 'view'),
                    (SELECT max(ts) FROM events
                     WHERE event_type = 'purchase'))
-             - INTERVAL {SJL_WM_SECONDS} SECOND AS w
+             - INTERVAL {SJ_WM_SECONDS} SECOND AS w
     ),
     matched AS (
       SELECT v.user_id, v.view_ts, p.purchase_ts
@@ -1595,61 +1432,8 @@ def streaming_full_outer_interval_join_e2e(
     left's wm > view_ts + window — state is never larger than the
     left-outer case.
     """
-    tag = hashlib.md5(sf_dir.encode()).hexdigest()[:8]
-    base = os.path.join(tempfile.gettempdir(), f"cw_sfojoin_{tag}")
-    stage_v = os.path.join(base, "views")
-    stage_p = os.path.join(base, "purch")
-    ckpt = os.path.join(base, "ckpt")
-    shutil.rmtree(base, ignore_errors=True)
-
-    ev = load_table(spark, sf_dir, "events").select("ts", "user_id", "event_type")
-    _stage_by_event_time(
-        ev.filter(F.col("event_type") == "view").drop("event_type"),
-        stage_v, SW_STAGE_FILES,
-    )
-    _stage_by_event_time(
-        ev.filter(F.col("event_type") == "purchase").drop("event_type"),
-        stage_p, SW_STAGE_FILES,
-    )
-    schema = "ts timestamp, user_id long"
-    views = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", SW_FILES_PER_TRIGGER)
-        .parquet(stage_v)
-        .withWatermark("ts", f"{SJL_WM_SECONDS} seconds")
-        .select(F.col("user_id").alias("v_user"), F.col("ts").alias("view_ts"))
-    )
-    purchases = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", SW_FILES_PER_TRIGGER)
-        .parquet(stage_p)
-        .withWatermark("ts", f"{SJL_WM_SECONDS} seconds")
-        .select(
-            F.col("user_id").alias("p_user"),
-            F.col("ts").alias("purchase_ts"),
-        )
-    )
-    joined = views.join(
-        purchases,
-        F.expr(
-            f"""v_user = p_user
-            AND purchase_ts > view_ts
-            AND purchase_ts <= view_ts + INTERVAL {SJ_ATTR_HOURS} HOUR"""
-        ),
-        "full_outer",
-    )
-    qname = f"cw_sfojoin_out_{tag}"
-    q = (
-        joined.writeStream.format("memory")
-        .queryName(qname)
-        .outputMode("append")
-        .option("checkpointLocation", ckpt)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
     return (
-        spark.table(qname)
+        _view_purchase_join(spark, sf_dir, "cw_sfojoin", "full_outer")
         .groupBy(F.coalesce("v_user", "p_user").alias("user_id"))
         .agg(
             F.count("*").cast("long").alias("n_rows"),

@@ -20,7 +20,7 @@ import os
 import shutil
 import tempfile
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from couchwarehouse_spark.catalog import load_table
@@ -58,141 +58,119 @@ TT_SUBSET = 3  # time_travel_cdc feeds only o_orderkey % 3 == 0 (spool
 # manifest-layer certification doesn't need a second full-corpus spool)
 
 
+def _order_id(prefix: str) -> Column:
+    return F.concat(F.lit(prefix), F.col("o_orderkey").cast("string"))
+
+
+def order_doc(prefix: str = "order", extra: tuple[Column, ...] = ()) -> Column:
+    """The insert doc every derived feed carries for the current
+    ``orders`` row; ``extra`` fields sit between ``total`` and the
+    nested ``customer`` struct (which exercises flatten into
+    ``customer_id``)."""
+    return F.struct(
+        _order_id(prefix).alias("_id"),
+        F.lit("1-x").alias("_rev"),
+        F.col("o_orderstatus").alias("status"),
+        F.col("o_totalprice").alias("total"),
+        *extra,
+        F.struct(F.col("o_custkey").alias("id")).alias("customer"),
+    )
+
+
+def amended_doc(doc: Column, status: str = "amended", **added: Column) -> Column:
+    """``doc`` at its second revision: ``_rev`` and ``status``
+    overwritten in place, ``added`` fields appended after the last
+    one (a schema-evolving amendment)."""
+    doc = doc.withField("_rev", F.lit("2-x")).withField("status", F.lit(status))
+    for name, col in added.items():
+        doc = doc.withField(name, col)
+    return doc
+
+
+def envelope(
+    seq_offset: int, prefix: str = "order", doc: Column | None = None
+) -> Column:
+    """One ``{seq, id, deleted?, doc}`` change line for the current
+    ``orders`` row at seq ``o_orderkey + seq_offset``, as
+    ``struct(sortseq, value)`` (the numeric seq orders landing files);
+    ``doc=None`` is a tombstone."""
+    seq = F.col("o_orderkey") + F.lit(seq_offset)
+    fields = [
+        F.concat(seq.cast("string"), F.lit("-seq")).alias("seq"),
+        _order_id(prefix).alias("id"),
+        F.lit(True).alias("deleted") if doc is None else doc.alias("doc"),
+    ]
+    return F.struct(
+        seq.cast("long").alias("sortseq"), F.to_json(F.struct(*fields)).alias("value")
+    )
+
+
+def order_changes(extra: tuple[Column, ...] = (), **added: Column) -> Column:
+    """The row's changes as ``array<struct<sortseq, value, phase>>``:
+    its insert (phase 1), plus an amendment when ``o_orderkey %
+    AMEND == 0`` and a tombstone when ``o_orderkey % DELETE == 0``
+    (phase 2, higher seqs). ``extra`` goes to both doc revisions,
+    ``added`` to the amendment only."""
+    key = F.col("o_orderkey")
+    doc = order_doc(extra=extra)
+    changes = F.array(
+        envelope(0, doc=doc).withField("phase", F.lit(1)),
+        F.when(
+            key % AMEND == 0,
+            envelope(1_000_000_000, doc=amended_doc(doc, **added)).withField(
+                "phase", F.lit(2)
+            ),
+        ),
+        F.when(
+            key % DELETE == 0, envelope(2_000_000_000).withField("phase", F.lit(2))
+        ),
+    )
+    return F.filter(changes, lambda c: c.isNotNull())
+
+
+def _feed_orders(spark: SparkSession, sf_dir: str, subset: int | None) -> DataFrame:
+    """``orders`` (``subset=k`` keeps ``o_orderkey % k == 0``), widened:
+    one parquet file = one task, so without the repartition the JSON
+    serialization runs on a single core AND the spooler inherits a
+    near-sequential read of one big text file."""
+    orders = load_table(spark, sf_dir, "orders")
+    if subset is not None:
+        orders = orders.filter(F.col("o_orderkey") % subset == 0)
+    return orders.repartition(data_width(spark, sf_dir, "orders"))
+
+
 def _build_feed(
     spark: SparkSession,
     sf_dir: str,
     feed_dir: str,
     phase: int | None = None,
     subset: int | None = None,
+    extra: tuple[Column, ...] = (),
 ) -> None:
-    """``phase=None``: one feed with inserts + amendments + tombstones.
-    ``phase=1``: inserts only. ``phase=2``: amendments + tombstones
-    only (the later changes) — the two-phase split time_travel_cdc
-    spools to produce two distinct table versions. ``subset=k`` keeps
-    only orders with ``o_orderkey % k == 0``."""
-    # One parquet file = one task: without this the whole JSON
-    # serialization runs on a single core AND the spooler inherits a
-    # near-sequential read of one big text file. Widening here
-    # parallelizes both sides of the feed.
-    orders = load_table(spark, sf_dir, "orders")
-    if subset is not None:
-        orders = orders.filter(F.col("o_orderkey") % subset == 0)
-    orders = orders.repartition(data_width(spark, sf_dir, "orders"))
-    doc = F.struct(
-        F.concat(F.lit("order"), F.col("o_orderkey").cast("string")).alias("_id"),
-        F.lit("1-x").alias("_rev"),
-        F.col("o_orderstatus").alias("status"),
-        F.col("o_totalprice").alias("total"),
-        # nested struct → exercises flatten into customer_id
-        F.struct(F.col("o_custkey").alias("id")).alias("customer"),
+    """One feed of every row's changes (``order_changes``);
+    ``phase=1`` keeps only the inserts."""
+    feed = _feed_orders(spark, sf_dir, subset).select(
+        F.explode(order_changes(extra)).alias("e")
     )
-
-    def envelope(seq_col, doc_col, deleted: bool):
-        fields = [
-            F.concat(seq_col.cast("string"), F.lit("-seq")).alias("seq"),
-            F.concat(F.lit("order"), F.col("o_orderkey").cast("string")).alias("id"),
-        ]
-        if deleted:
-            fields.append(F.lit(True).alias("deleted"))
-        if doc_col is not None:
-            fields.append(doc_col.alias("doc"))
-        return F.to_json(F.struct(*fields))
-
-    amended_doc = F.struct(
-        doc["_id"].alias("_id"),
-        F.lit("2-x").alias("_rev"),
-        F.lit("amended").alias("status"),
-        doc["total"].alias("total"),
-        doc["customer"].alias("customer"),
-    )
-    # One scan of orders, not three union branches: each row emits its
-    # insert envelope plus (conditionally) an amendment and a tombstone,
-    # null-filtered and exploded — the same rows, a third of the I/O.
-    insert_env = envelope(F.col("o_orderkey"), doc, False)
-    amend_env = F.when(
-        F.col("o_orderkey") % AMEND == 0,
-        envelope(F.col("o_orderkey") + F.lit(1_000_000_000), amended_doc, False),
-    )
-    tomb_env = F.when(
-        F.col("o_orderkey") % DELETE == 0,
-        envelope(F.col("o_orderkey") + F.lit(2_000_000_000), None, True),
-    )
-    if phase == 1:
-        envs = F.array(insert_env)
-    elif phase == 2:
-        envs = F.array(amend_env, tomb_env)
-        orders = orders.filter(
-            (F.col("o_orderkey") % AMEND == 0) | (F.col("o_orderkey") % DELETE == 0)
-        )
-    else:
-        envs = F.array(insert_env, amend_env, tomb_env)
-    feed = orders.select(
-        F.explode(F.filter(envs, lambda x: x.isNotNull())).alias("value")
-    )
-    feed.write.mode("overwrite").text(feed_dir)
+    if phase is not None:
+        feed = feed.filter(F.col("e.phase") == phase)
+    feed.select("e.value").write.mode("overwrite").text(feed_dir)
 
 
 def _build_two_phase_feeds(
-    spark: SparkSession, sf_dir: str, base: str, subset: int
+    spark: SparkSession, sf_dir: str, base: str, subset: int, **added: Column
 ) -> tuple[str, str]:
-    """Both time-travel feeds from ONE orders scan: every row emits its
-    phase-1 insert envelope plus any phase-2 amendment/tombstone, and a
-    partitionBy('phase') text write routes them into phase=1/ and
-    phase=2/ subdirectories — the two spool inputs — in a single job
-    (halves the feed-construction I/O vs two _build_feed passes)."""
-    orders = (
-        load_table(spark, sf_dir, "orders")
-        .filter(F.col("o_orderkey") % subset == 0)
-        .repartition(data_width(spark, sf_dir, "orders"))
+    """Both phases of ``order_changes`` from ONE orders scan: a
+    partitionBy('phase') text write routes the inserts and the later
+    amendments/tombstones into phase=1/ and phase=2/ subdirectories —
+    two spool inputs producing two distinct table versions — in a
+    single job. ``added`` fields go to the amendments only."""
+    feed = _feed_orders(spark, sf_dir, subset).select(
+        F.explode(order_changes(**added)).alias("e")
     )
-    doc = F.struct(
-        F.concat(F.lit("order"), F.col("o_orderkey").cast("string")).alias("_id"),
-        F.lit("1-x").alias("_rev"),
-        F.col("o_orderstatus").alias("status"),
-        F.col("o_totalprice").alias("total"),
-        F.struct(F.col("o_custkey").alias("id")).alias("customer"),
-    )
-    amended_doc = F.struct(
-        doc["_id"].alias("_id"),
-        F.lit("2-x").alias("_rev"),
-        F.lit("amended").alias("status"),
-        doc["total"].alias("total"),
-        doc["customer"].alias("customer"),
-    )
-
-    def envelope(seq_col, doc_col, deleted: bool):
-        fields = [
-            F.concat(seq_col.cast("string"), F.lit("-seq")).alias("seq"),
-            F.concat(F.lit("order"), F.col("o_orderkey").cast("string")).alias("id"),
-        ]
-        if deleted:
-            fields.append(F.lit(True).alias("deleted"))
-        if doc_col is not None:
-            fields.append(doc_col.alias("doc"))
-        return F.to_json(F.struct(*fields))
-
-    tagged = F.filter(
-        F.array(
-            F.struct(F.lit(1).alias("phase"), envelope(F.col("o_orderkey"), doc, False).alias("value")),
-            F.struct(
-                F.lit(2).alias("phase"),
-                F.when(
-                    F.col("o_orderkey") % AMEND == 0,
-                    envelope(F.col("o_orderkey") + F.lit(1_000_000_000), amended_doc, False),
-                ).alias("value"),
-            ),
-            F.struct(
-                F.lit(2).alias("phase"),
-                F.when(
-                    F.col("o_orderkey") % DELETE == 0,
-                    envelope(F.col("o_orderkey") + F.lit(2_000_000_000), None, True),
-                ).alias("value"),
-            ),
-        ),
-        lambda s: s["value"].isNotNull(),
-    )
-    feed = orders.select(F.explode(tagged).alias("e")).select("e.phase", "e.value")
-    feed.write.mode("overwrite").partitionBy("phase").text(base)
+    feed.select("e.phase", "e.value").write.mode("overwrite").partitionBy(
+        "phase"
+    ).text(base)
     return os.path.join(base, "phase=1"), os.path.join(base, "phase=2")
 
 
@@ -437,52 +415,9 @@ def warehouse_split_transform_e2e(spark: SparkSession, sf_dir: str) -> DataFrame
     wh_dir = os.path.join(base, "wh")
     shutil.rmtree(base, ignore_errors=True)
 
-    orders = (
-        load_table(spark, sf_dir, "orders")
-        .filter(F.col("o_orderkey") % ST_SUBSET == 0)
-        .repartition(data_width(spark, sf_dir, "orders"))
-    )
+    # The routing field — same for amendments.
     kind = F.when(F.col("o_totalprice") >= ST_CUT, "large").otherwise("small")
-
-    def doc_struct(rev: str, status):
-        return F.struct(
-            F.concat(F.lit("order"), F.col("o_orderkey").cast("string")).alias("_id"),
-            F.lit(rev).alias("_rev"),
-            status.alias("status"),
-            F.col("o_totalprice").alias("total"),
-            kind.alias("kind"),  # the routing field — same for amendments
-            F.struct(F.col("o_custkey").alias("id")).alias("customer"),
-        )
-
-    def envelope(seq_col, doc_col, deleted: bool):
-        fields = [
-            F.concat(seq_col.cast("string"), F.lit("-seq")).alias("seq"),
-            F.concat(F.lit("order"), F.col("o_orderkey").cast("string")).alias("id"),
-        ]
-        if deleted:
-            fields.append(F.lit(True).alias("deleted"))
-        if doc_col is not None:
-            fields.append(doc_col.alias("doc"))
-        return F.to_json(F.struct(*fields))
-
-    envs = F.array(
-        envelope(F.col("o_orderkey"), doc_struct("1-x", F.col("o_orderstatus")), False),
-        F.when(
-            F.col("o_orderkey") % AMEND == 0,
-            envelope(
-                F.col("o_orderkey") + F.lit(1_000_000_000),
-                doc_struct("2-x", F.lit("amended")),
-                False,
-            ),
-        ),
-        F.when(
-            F.col("o_orderkey") % DELETE == 0,
-            envelope(F.col("o_orderkey") + F.lit(2_000_000_000), None, True),
-        ),
-    )
-    orders.select(
-        F.explode(F.filter(envs, lambda x: x.isNotNull())).alias("value")
-    ).write.mode("overwrite").text(feed_dir)
+    _build_feed(spark, sf_dir, feed_dir, subset=ST_SUBSET, extra=(kind.alias("kind"),))
 
     wh = Warehouse(
         spark,
@@ -579,77 +514,6 @@ SE_SUBSET = 6  # schema_evolution_e2e feeds only o_orderkey % 6 == 0
 FEED_DOC_DDL_EVOLVED = FEED_DOC_DDL + ", channel string"
 
 
-def _build_evolution_feeds(
-    spark: SparkSession, sf_dir: str, base: str, subset: int
-) -> tuple[str, str]:
-    """Two-phase evolution feed from ONE orders scan: phase 1 inserts
-    the original doc shape; phase 2 amends every AMEND-th order with a
-    doc that ADDS a ``channel`` field (the evolution trigger) and
-    tombstones every DELETE-th — the reference's run_evolve.js feed
-    shape, derived distributedly (same partitionBy('phase') routing as
-    ``_build_two_phase_feeds``)."""
-    orders = (
-        load_table(spark, sf_dir, "orders")
-        .filter(F.col("o_orderkey") % subset == 0)
-        .repartition(data_width(spark, sf_dir, "orders"))
-    )
-    doc = F.struct(
-        F.concat(F.lit("order"), F.col("o_orderkey").cast("string")).alias("_id"),
-        F.lit("1-x").alias("_rev"),
-        F.col("o_orderstatus").alias("status"),
-        F.col("o_totalprice").alias("total"),
-        F.struct(F.col("o_custkey").alias("id")).alias("customer"),
-    )
-    amended_doc = F.struct(
-        doc["_id"].alias("_id"),
-        F.lit("2-x").alias("_rev"),
-        F.lit("amended").alias("status"),
-        doc["total"].alias("total"),
-        doc["customer"].alias("customer"),
-        F.lit("web").alias("channel"),  # the field that evolves the schema
-    )
-
-    def envelope(seq_col, doc_col, deleted: bool):
-        fields = [
-            F.concat(seq_col.cast("string"), F.lit("-seq")).alias("seq"),
-            F.concat(F.lit("order"), F.col("o_orderkey").cast("string")).alias("id"),
-        ]
-        if deleted:
-            fields.append(F.lit(True).alias("deleted"))
-        if doc_col is not None:
-            fields.append(doc_col.alias("doc"))
-        return F.to_json(F.struct(*fields))
-
-    tagged = F.filter(
-        F.array(
-            F.struct(
-                F.lit(1).alias("phase"),
-                envelope(F.col("o_orderkey"), doc, False).alias("value"),
-            ),
-            F.struct(
-                F.lit(2).alias("phase"),
-                F.when(
-                    F.col("o_orderkey") % AMEND == 0,
-                    envelope(
-                        F.col("o_orderkey") + F.lit(1_000_000_000), amended_doc, False
-                    ),
-                ).alias("value"),
-            ),
-            F.struct(
-                F.lit(2).alias("phase"),
-                F.when(
-                    F.col("o_orderkey") % DELETE == 0,
-                    envelope(F.col("o_orderkey") + F.lit(2_000_000_000), None, True),
-                ).alias("value"),
-            ),
-        ),
-        lambda s: s["value"].isNotNull(),
-    )
-    feed = orders.select(F.explode(tagged).alias("e")).select("e.phase", "e.value")
-    feed.write.mode("overwrite").partitionBy("phase").text(base)
-    return os.path.join(base, "phase=1"), os.path.join(base, "phase=2")
-
-
 @query(
     "schema_evolution_e2e",
     oracle=f"""
@@ -696,8 +560,10 @@ def schema_evolution_e2e(spark: SparkSession, sf_dir: str) -> DataFrame:
     wh_dir = os.path.join(base, "wh")
     shutil.rmtree(base, ignore_errors=True)
 
-    feed1, feed2 = _build_evolution_feeds(
-        spark, sf_dir, os.path.join(base, "feeds"), SE_SUBSET
+    # Phase-2 amendments ADD a ``channel`` field (the evolution
+    # trigger) — the reference's run_evolve.js feed shape.
+    feed1, feed2 = _build_two_phase_feeds(
+        spark, sf_dir, os.path.join(base, "feeds"), SE_SUBSET, channel=F.lit("web")
     )
     wh = Warehouse(
         spark,
@@ -1049,29 +915,10 @@ def _build_insert_wave(
     must carry HIGHER seqs (``seq_offset``) — a changes feed is
     seq-monotone and the spool's checkpoint resume skips anything at
     or below the last committed seq."""
-    orders = (
-        load_table(spark, sf_dir, "orders")
-        .filter(F.col("o_orderkey") % subset == 0)
-        .repartition(data_width(spark, sf_dir, "orders"))
-    )
-    doc = F.struct(
-        F.concat(F.lit(prefix), F.col("o_orderkey").cast("string")).alias("_id"),
-        F.lit("1-x").alias("_rev"),
-        F.col("o_orderstatus").alias("status"),
-        F.col("o_totalprice").alias("total"),
-        F.struct(F.col("o_custkey").alias("id")).alias("customer"),
-    )
-    env = F.to_json(
-        F.struct(
-            F.concat(
-                (F.col("o_orderkey") + F.lit(seq_offset)).cast("string"),
-                F.lit("-seq"),
-            ).alias("seq"),
-            F.concat(F.lit(prefix), F.col("o_orderkey").cast("string")).alias("id"),
-            doc.alias("doc"),
-        )
-    )
-    orders.select(env.alias("value")).write.mode("overwrite").text(feed_dir)
+    env = envelope(seq_offset, prefix, order_doc(prefix))
+    _feed_orders(spark, sf_dir, subset).select(env["value"]).write.mode(
+        "overwrite"
+    ).text(feed_dir)
 
 
 @query(

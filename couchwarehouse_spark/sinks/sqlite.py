@@ -1,158 +1,26 @@
-"""SQLite sink — a REAL round-trip to the reference's default target
-(reference lib/sqlite.js): ``CREATE TABLE IF NOT EXISTS`` from the
-discovered schema (:23-52), per-change ``REPLACE INTO`` upserts and
-``DELETE ... WHERE id=?`` tombstones (:60-110), and the
-``couchwarehouse_checkpoints`` table (:11, :138-170).
+"""SQLite follower — continuous sync to the reference's default
+target (reference lib/sqlite.js). The statements (``CREATE TABLE IF
+NOT EXISTS`` from the discovered schema, per-change ``REPLACE INTO``
+upserts and ``DELETE ... WHERE id=?`` tombstones, the
+``couchwarehouse_checkpoints`` table) and the egress protocol are the
+``sqlite`` row of ``sinks.dialects.DialectSink``.
 
 Transport is the stdlib ``sqlite3`` module on the DRIVER — exactly
 the reference's topology (one Node process, one better-sqlite3
-handle). The egress iterates ``df.toLocalIterator()`` so at most one
-Spark partition is resident in driver memory at a time; SQLite is a
-single-writer embedded file, so a distributed writer cannot beat a
-single connection anyway. For genuinely parallel relational egress
-the JDBC adapter (``sinks.jdbc``) is the scale lane; this sink's job
-is per-row parity with the reference's primary backend, verifiable
-in-container.
-
-Type mapping (reference lib/sqlite.js:13-21 ``couchTypeToSQL``):
-string→TEXT, number→REAL, boolean→INTEGER(0/1), anything
-non-scalar arrives pre-flattened to JSON TEXT by the flatten step.
+handle); SQLite is a single-writer embedded file, so a distributed
+writer cannot beat a single connection anyway. For genuinely
+parallel relational egress the JDBC adapter (``sinks.jdbc``) is the
+scale lane; this follower's job is per-row parity with the
+reference's primary backend, verifiable in-container.
 """
 
 from __future__ import annotations
 
-import json
 import sqlite3
-from collections.abc import Mapping
-from typing import Any
 
 from pyspark.sql import DataFrame
 
-CHECKPOINT_TABLE = "couchwarehouse_checkpoints"
-
-LOGICAL_TO_SQLITE = {
-    "string": "TEXT",
-    "number": "REAL",
-    "boolean": "INTEGER",
-}
-
-
-def sqlite_create_table_sql(
-    table: str, schema: Mapping[str, str], reset: bool = False
-) -> list[str]:
-    """The reference's DDL, dialect-exact: ``id TEXT PRIMARY KEY``
-    plus one column per discovered field (reference
-    lib/sqlite.js:23-52)."""
-    cols = []
-    for name, logical in schema.items():
-        sql_type = LOGICAL_TO_SQLITE.get(logical, "TEXT")
-        if name == "id":
-            cols.append(f'"{name}" {sql_type} PRIMARY KEY')
-        else:
-            cols.append(f'"{name}" {sql_type}')
-    stmts = []
-    if reset:
-        stmts.append(f'DROP TABLE IF EXISTS "{table}"')
-    stmts.append(f'CREATE TABLE IF NOT EXISTS "{table}" ({", ".join(cols)})')
-    return stmts
-
-
-def _to_sqlite_value(v: Any) -> Any:
-    import datetime
-    import decimal
-
-    if isinstance(v, bool):
-        return int(v)  # reference stores booleans as 0/1
-    if v is None or isinstance(v, (str, int, float, bytes)):
-        return v
-    if isinstance(v, decimal.Decimal):
-        return float(v)
-    if isinstance(v, (datetime.date, datetime.datetime)):
-        return v.isoformat()
-    try:
-        return json.dumps(v)  # arrays/structs that escaped the flatten
-    except TypeError:
-        return str(v)
-
-
-class SQLiteSink:
-    """Driver-side SQLite egress with the reference's exact statement
-    shapes. Usable standalone or as a ``foreachBatch`` target."""
-
-    def __init__(self, path: str):
-        self.path = path
-        self.con = sqlite3.connect(path)
-        self.con.execute(
-            f'CREATE TABLE IF NOT EXISTS "{CHECKPOINT_TABLE}" '
-            "(tablename TEXT, seq TEXT, timestamp INTEGER DEFAULT (strftime('%s','now')))"
-        )
-        self.con.commit()
-
-    # -- DDL (R10) ----------------------------------------------------
-    def create_table(
-        self, table: str, schema: Mapping[str, str], reset: bool = False
-    ) -> None:
-        for stmt in sqlite_create_table_sql(table, schema, reset=reset):
-            self.con.execute(stmt)
-        self.con.commit()
-
-    # -- bulk upsert (reference insertBulk, lib/sqlite.js:60-110) -----
-    def insert_bulk(
-        self,
-        table: str,
-        df: DataFrame,
-        schema: Mapping[str, str],
-        key: str = "id",
-        deleted_col: str | None = None,
-    ) -> int:
-        """Apply a (flattened, conformed) DataFrame as REPLACE INTO
-        rows; rows with ``deleted_col`` true become DELETE-by-id.
-        Missing schema fields land as NULL (lib/sqlite.js:90-92).
-        One transaction per call = one changes batch, like the
-        reference. Returns rows applied."""
-        fields = list(schema)
-        placeholders = ", ".join("?" for _ in fields)
-        quoted = ", ".join(f'"{f}"' for f in fields)
-        replace_sql = f'REPLACE INTO "{table}" ({quoted}) VALUES ({placeholders})'
-        delete_sql = f'DELETE FROM "{table}" WHERE "{key}" = ?'
-        n = 0
-        cols = [c for c in fields if c in df.columns]
-        select = cols + ([deleted_col] if deleted_col else [])
-        with self.con:  # one transaction per batch
-            for row in df.select(*select).toLocalIterator():
-                d = row.asDict()
-                if deleted_col and d.get(deleted_col):
-                    self.con.execute(delete_sql, (d.get(key),))
-                else:
-                    self.con.execute(
-                        replace_sql,
-                        tuple(_to_sqlite_value(d.get(f)) for f in fields),
-                    )
-                n += 1
-        return n
-
-    # -- checkpoints (R14, lib/sqlite.js:138-170) ---------------------
-    def write_checkpoint(self, tablename: str, seq: str) -> None:
-        with self.con:
-            self.con.execute(
-                f'INSERT INTO "{CHECKPOINT_TABLE}" (tablename, seq) VALUES (?, ?)',
-                (tablename, str(seq)),
-            )
-
-    def read_checkpoint(self, tablename: str) -> str | None:
-        cur = self.con.execute(
-            f'SELECT seq FROM "{CHECKPOINT_TABLE}" WHERE tablename = ? '
-            "ORDER BY rowid DESC LIMIT 1",
-            (tablename,),
-        )
-        row = cur.fetchone()
-        return row[0] if row else None
-
-    def query(self, sql: str, params: tuple = ()) -> list[tuple]:
-        return list(self.con.execute(sql, params))
-
-    def close(self) -> None:
-        self.con.close()
+from couchwarehouse_spark.sinks.dialects import DialectSink
 
 
 def sqlite_follower(path: str):
@@ -178,8 +46,9 @@ def sqlite_follower(path: str):
     def follow(wh, doc_type: str, conformed: DataFrame, tombstones: DataFrame) -> None:
         schema = {"id": "string", **wh.schemas[doc_type]}
         table = wh.table_name(doc_type)
-        sink = SQLiteSink(path)
+        con = sqlite3.connect(path)
         try:
+            sink = DialectSink(con, "sqlite")
             sink.create_table(table, schema)
             # Same seq-ordered union the merge applies: a delete-then-
             # recreate within one batch resolves to the recreate, and a
@@ -194,6 +63,6 @@ def sqlite_follower(path: str):
                 table, winners.drop(SEQ_COL), schema, deleted_col="_cw_del"
             )
         finally:
-            sink.close()
+            con.close()
 
     return follow

@@ -9,9 +9,9 @@ Transport: Python stdlib ``urllib`` only. The tailer WRITES the
 landing-directory contract the rest of the engine already consumes —
 each HTTP batch lands as one immutable JSON-lines page (write to a
 dot-prefixed temp name, then atomic rename), so
-``sources.changes.read_changes_feed`` (batch), the ``couchdb_changes``
-custom data source, and ``streaming.ingest`` (file tailing) all see a
-live CouchDB database without knowing HTTP exists. This keeps the
+``sources.changes.read_changes_feed`` (batch) and ``streaming.ingest``
+(file tailing) both see a live CouchDB database without knowing HTTP
+exists. This keeps the
 distributed plane pure Spark: one driver-side thread does I/O against
 CouchDB; executors only ever read parquet-sized immutable pages.
 

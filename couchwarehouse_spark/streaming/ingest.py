@@ -16,12 +16,10 @@ the streaming checkpoint (D2: offsets/commits under
 the reference's couchwarehouse_checkpoints table on top).
 
 The feed source here is a JSON-lines landing directory (what a real
-deployment's HTTP tailer writes page by page). A first-class
-``couchdb_changes`` format also exists
-(sources.changes_source.ChangesFeedDataSource — Spark 4 Python Data
-Source with offset-tracked micro-batches and ``maxPagesPerBatch``
-rate limiting); the file stream stays the default because Python
-sources don't support ``Trigger.AvailableNow`` yet.
+deployment's HTTP tailer, ``sources.http_changes``, writes page by
+page): the file stream supports ``Trigger.AvailableNow`` and
+``maxFilesPerTrigger`` rate limiting, which Spark 4's Python data
+sources don't yet.
 """
 
 from __future__ import annotations

@@ -27,14 +27,21 @@ def interval_join_streams(
     right_ts: str,
     watermark: str = "1 hour",
     interval: str = "10 minutes",
+    how: str = "inner",
+    right_key: str | None = None,
 ) -> DataFrame:
-    """Join two watermarked streams: rows match when they share
-    ``key`` and the right event lands in ``[left_ts, left_ts +
-    interval]``. Column names on the two sides must differ except for
-    ``key`` (rename before calling — the result carries both sides'
-    columns); ``left_ts``/``right_ts`` are therefore REQUIRED and must
-    name distinct columns, or the joined frame would carry an
-    ambiguous event-time column no downstream select could reference.
+    """Join two watermarked streams: rows match when ``left[key] ==
+    right[right_key]`` (``right_key`` defaults to ``key``) and the
+    right event lands in ``(left_ts, left_ts + interval]`` — strictly
+    after the left event, at most ``interval`` later. ``how`` is any
+    stream-stream join type (``inner``, ``left_outer``,
+    ``full_outer``, ...); outer rows are emitted once the watermark
+    proves no match can still arrive. Column names on the two sides
+    must differ except for a shared key, whose right copy is dropped
+    (rename before calling — the result carries both sides' columns);
+    ``left_ts``/``right_ts`` are therefore REQUIRED and must name
+    distinct columns, or the joined frame would carry an ambiguous
+    event-time column no downstream select could reference.
 
     Scale: state is partitioned by the join key (one shuffle per
     side); the interval bound plus the watermark give each buffered
@@ -47,14 +54,16 @@ def interval_join_streams(
         raise ValueError(
             f"left_ts and right_ts must be distinct columns, both are {left_ts!r}"
         )
+    right_key = right_key or key
     l = left.withWatermark(left_ts, watermark).alias("l")
     r = right.withWatermark(right_ts, watermark).alias("r")
     cond = (
-        (F.col(f"l.{key}") == F.col(f"r.{key}"))
-        & (F.col(f"r.{right_ts}") >= F.col(f"l.{left_ts}"))
+        (F.col(f"l.{key}") == F.col(f"r.{right_key}"))
+        & (F.col(f"r.{right_ts}") > F.col(f"l.{left_ts}"))
         & (
             F.col(f"r.{right_ts}")
             <= F.col(f"l.{left_ts}") + F.expr(f"INTERVAL {interval}")
         )
     )
-    return l.join(r, cond).drop(F.col(f"r.{key}"))
+    joined = l.join(r, cond, how)
+    return joined.drop(F.col(f"r.{key}")) if right_key == key else joined

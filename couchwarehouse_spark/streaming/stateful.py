@@ -12,11 +12,8 @@
   aggregates can't express (here: running count/total emitted per
   batch with explicit state handling and timeout-based eviction).
 
-* ``running_user_totals_tws`` — the same aggregation on Spark 4's
-  ``transformWithStateInPandas`` (typed ValueState + state-store TTL;
-  the forward path for custom stateful operators). Its wire protocol
-  needs protobuf, absent in this container — the operator is plain
-  public API usage and its test skips without protobuf.
+* ``debounce_stream`` — per-key island-head filter on the same API,
+  the streaming twin of ``plans.events_windows.event_debounce``.
 
 Scale: state lives in the state store, partitioned by key — shuffle
 on the key once, each micro-batch touches only keys present in the
@@ -33,23 +30,23 @@ from pyspark.sql import types as T
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
 
-def dedup_late_events(stream: DataFrame, watermark: str = "1 hour") -> DataFrame:
-    """Streaming exactly-once-per-id dedup with bounded state (D3).
+def dedup_late_events(
+    stream: DataFrame, watermark: str = "1 hour", key: str = "event_id"
+) -> DataFrame:
+    """Streaming exactly-once-per-``key`` dedup with bounded state (D3).
 
-    Duplicate event_ids arriving within the watermark horizon are
-    dropped — INCLUDING reissues that carry a different event time
+    Duplicate keys arriving within the watermark horizon (on ``ts``)
+    are dropped — INCLUDING reissues that carry a different event time
     (the replayed-feed case: a retry gets a fresh timestamp but the
-    same id) — and each id's state is evicted one watermark horizon
+    same id) — and each key's state is evicted one watermark horizon
     after first sight. ``dropDuplicatesWithinWatermark``, NOT plain
     ``dropDuplicates``: with the plain form, dedup state is only
     evicted when the event-time column is part of the dedup keys, so
-    keying on event_id alone would grow state with every id ever seen
+    keying on the id alone would grow state with every id ever seen
     — the bounded-state claim this operator exists for would be false.
     This is the streaming analog of the upsert kernel's idempotence.
     """
-    return stream.withWatermark("ts", watermark).dropDuplicatesWithinWatermark(
-        ["event_id"]
-    )
+    return stream.withWatermark("ts", watermark).dropDuplicatesWithinWatermark([key])
 
 
 RUNNING_TOTALS_OUTPUT = T.StructType(
@@ -99,64 +96,6 @@ def running_user_totals(stream: DataFrame) -> DataFrame:
             stateStructType=RUNNING_TOTALS_STATE,
             outputMode="update",
             timeoutConf=GroupStateTimeout.ProcessingTimeTimeout,
-        )
-    )
-
-
-def _make_running_totals_processor():
-    """Build the Spark-4 ``StatefulProcessor`` computing the same
-    per-user running totals as ``running_user_totals`` on the new
-    ``transformWithStateInPandas`` API — typed ValueState instead of
-    one opaque tuple, with TTL-based eviction handled by the state
-    store itself (requires ProcessingTime time mode) rather than
-    hand-rolled timeout bookkeeping. A factory (not a module-level
-    subclass) because importing the base class pulls in the API's
-    protobuf wire layer, absent in some environments."""
-    from pyspark.sql.streaming.stateful_processor import StatefulProcessor
-
-    class Impl(StatefulProcessor):
-        def init(self, handle) -> None:
-            self._totals = handle.getValueState(
-                "totals", RUNNING_TOTALS_STATE,
-                ttlDurationMs=3_600_000,  # evict idle keys after 1h
-            )
-
-        def handleInputRows(self, key, rows, timerValues):
-            n, total = (
-                tuple(self._totals.get()) if self._totals.exists() else (0, 0.0)
-            )
-            for pdf in rows:
-                n += len(pdf)
-                total += float(pdf["value"].sum())
-            self._totals.update((n, total))
-            yield pd.DataFrame(
-                {
-                    "user_id": [key[0]],
-                    "n_events": [n],
-                    "total_value": [round(total, 2)],
-                }
-            )
-
-        def close(self) -> None:
-            pass
-
-    return Impl()
-
-
-def running_user_totals_tws(stream: DataFrame) -> DataFrame:
-    """D5 on the Spark-4 arbitrary-state API: per-user running
-    count/total via ``transformWithStateInPandas`` — the forward path
-    for custom stateful operators (typed composite state, timers,
-    state TTL; same key-partitioned state-store scaling as
-    ``applyInPandasWithState``)."""
-    return (
-        stream.select("user_id", "value")
-        .groupBy("user_id")
-        .transformWithStateInPandas(
-            statefulProcessor=_make_running_totals_processor(),
-            outputStructType=RUNNING_TOTALS_OUTPUT,
-            outputMode="Update",
-            timeMode="ProcessingTime",
         )
     )
 

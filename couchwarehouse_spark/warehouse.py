@@ -2328,7 +2328,7 @@ class Warehouse:
         current version, carrying ``change_type`` (insert / update /
         delete), the new column values (NULLs for deletes) and
         ``_cw_deleted`` — exactly the shape the live sinks apply
-        (``SQLiteSink.insert_bulk(deleted_col=...)``,
+        (``DialectSink.insert_bulk(deleted_col=...)``,
         ``push_bulk_http(deleted_col=...)``), so a downstream consumer
         that missed N batches catches up with ONE incremental diff
         instead of a re-export.

@@ -99,9 +99,24 @@ except ImportError:  # hypothesis optional for non-property runs
 # env var away and is the builder-loop default before every round
 # close:
 #     SPARK_GRAFT_FULL_TESTS=1 python -m pytest tests/ -q
+# A test named by node id on the command line always runs, e.g.
+#     python -m pytest 'tests/test_oracle_parity.py::test_query_matches_oracle[time_travel_cdc]'
 # Regenerate the manifests after adding slow tests:
 #     SPARK_GRAFT_FULL_TESTS=1 python -m pytest tests/ -q --durations=0
-# then rebuild the two JSON files from the durations block.
+# then rebuild the two JSON files from the durations block
+# (tests/test_fast_lane.py checks they agree with the suite).
+def _named_node_ids(config) -> set[str]:
+    """Node ids (relative to the rootdir, like ``item.nodeid``) of the
+    ``path::name`` arguments on the command line."""
+    named = set()
+    for arg in config.args:
+        path, sep, rest = arg.partition("::")
+        if sep:
+            full = config.invocation_params.dir / path
+            named.add(f"{_os.path.relpath(full, config.rootpath)}::{rest}")
+    return named
+
+
 def pytest_collection_modifyitems(config, items):
     if _os.environ.get("SPARK_GRAFT_FULL_TESTS"):
         return
@@ -111,7 +126,12 @@ def pytest_collection_modifyitems(config, items):
     manifest = pathlib.Path(__file__).parent / "fast_lane_skip.json"
     if not manifest.exists():
         return
-    skip = set(json.loads(manifest.read_text()))
+    named = _named_node_ids(config)
+    skip = {
+        node
+        for node in json.loads(manifest.read_text())
+        if not any(node == n or node.startswith((n + "[", n + "::")) for n in named)
+    }
     keep = [it for it in items if it.nodeid not in skip]
     drop = [it for it in items if it.nodeid in skip]
     if drop:

@@ -338,6 +338,8 @@ def _drain(df, qname: str, ckpt: str):
 
 def streaming_state_stress(spark, base_sf: str, workdir: str, copies: int) -> list[str]:
     from couchwarehouse_spark.plans.streaming_e2e import _stage_by_event_time
+    from couchwarehouse_spark.streaming.joins import interval_join_streams
+    from couchwarehouse_spark.streaming.stateful import dedup_late_events
 
     failures: list[str] = []
 
@@ -358,12 +360,11 @@ def streaming_state_stress(spark, base_sf: str, workdir: str, copies: int) -> li
         n_in = dup.count()
         stage = os.path.join(base_dir, f"dedup_in_{c}x")
         _stage_by_event_time(dup, stage, SS_FILES_PER_COPY * c)
-        stream = (
+        stream = dedup_late_events(
             spark.readStream.schema("ts timestamp, event_id long")
             .option("maxFilesPerTrigger", SS_FILES_PER_TRIGGER)
-            .parquet(stage)
-            .withWatermark("ts", SS_WM)
-            .dropDuplicatesWithinWatermark(["event_id"])
+            .parquet(stage),
+            SS_WM,
         )
         q = _drain(stream, f"ss_dedup_{c}x", os.path.join(base_dir, f"dedup_ck_{c}x"))
         n_out = spark.table(f"ss_dedup_{c}x").count()
@@ -387,27 +388,26 @@ def streaming_state_stress(spark, base_sf: str, workdir: str, copies: int) -> li
             ev.filter(F.col("event_type") == "purchase").select("ts", "user_id"),
             pstage, SS_FILES_PER_COPY * c,
         )
-        schema = "ts timestamp, user_id long"
-        views = (
-            spark.readStream.schema(schema)
-            .option("maxFilesPerTrigger", SS_FILES_PER_TRIGGER)
-            .parquet(vstage)
-            .withWatermark("ts", SS_WM)
-            .select(F.col("user_id").alias("v_user"), F.col("ts").alias("view_ts"))
-        )
-        purch = (
-            spark.readStream.schema(schema)
-            .option("maxFilesPerTrigger", SS_FILES_PER_TRIGGER)
-            .parquet(pstage)
-            .withWatermark("ts", SS_WM)
-            .select(F.col("user_id").alias("p_user"), F.col("ts").alias("purchase_ts"))
-        )
-        joined = views.join(
-            purch,
-            F.expr(
-                "v_user = p_user AND purchase_ts > view_ts "
-                "AND purchase_ts <= view_ts + INTERVAL 1 HOUR"
+        def read(stage: str):
+            return (
+                spark.readStream.schema("ts timestamp, user_id long")
+                .option("maxFilesPerTrigger", SS_FILES_PER_TRIGGER)
+                .parquet(stage)
+            )
+
+        joined = interval_join_streams(
+            read(vstage).select(
+                F.col("user_id").alias("v_user"), F.col("ts").alias("view_ts")
             ),
+            read(pstage).select(
+                F.col("user_id").alias("p_user"), F.col("ts").alias("purchase_ts")
+            ),
+            key="v_user",
+            right_key="p_user",
+            left_ts="view_ts",
+            right_ts="purchase_ts",
+            watermark=SS_WM,
+            interval="1 hour",
         )
         q = _drain(joined, f"ss_join_{c}x", os.path.join(base_dir, f"join_ck_{c}x"))
         n_pairs = spark.table(f"ss_join_{c}x").count()

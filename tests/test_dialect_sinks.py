@@ -1,5 +1,6 @@
-"""PG/MySQL dialect-exact statement generation + fake-server
-round-trips (S18; reference lib/postgresql.js, lib/mysql.js).
+"""SQLite/PG/MySQL dialect-exact statement generation + fake-server
+round-trips (S18; reference lib/sqlite.js, lib/postgresql.js,
+lib/mysql.js).
 
 The byte-exact assertions below are copied from the statements the
 reference actually issues — generateCreateTableSQL, insertBulk's
@@ -52,6 +53,23 @@ def test_mysql_create_table_sql_byte_exact():
     ]
 
 
+def test_sqlite_create_table_sql_byte_exact():
+    """reference lib/sqlite.js:23-52: quoted identifiers,
+    TEXT/REAL/INTEGER map, ``"id"`` carries PRIMARY KEY."""
+    assert create_table_sql("sqlite", "mydb", SCHEMA, reset=True) == [
+        'DROP TABLE IF EXISTS "mydb"',
+        'CREATE TABLE IF NOT EXISTS "mydb" '
+        '("id" TEXT PRIMARY KEY, "name" TEXT, "price" REAL, "paid" INTEGER)',
+    ]
+
+
+def test_sqlite_upsert_sql_byte_exact():
+    """reference lib/sqlite.js:82."""
+    assert upsert_sql("sqlite", "mydb", FIELDS) == (
+        'REPLACE INTO "mydb" ("id", "name", "price", "paid") VALUES (?, ?, ?, ?)'
+    )
+
+
 def test_pg_upsert_sql_byte_exact():
     """reference lib/postgresql.js:91 — including the trailing
     ``$n+1`` id parameter for the DO UPDATE predicate."""
@@ -73,6 +91,7 @@ def test_delete_sql_byte_exact():
     """reference lib/postgresql.js:92 / lib/mysql.js:105."""
     assert delete_sql("postgresql", "mydb") == "DELETE FROM mydb WHERE id = $1"
     assert delete_sql("mysql", "mydb") == "DELETE FROM mydb WHERE id = ?"
+    assert delete_sql("sqlite", "mydb") == 'DELETE FROM "mydb" WHERE "id" = ?'
 
 
 def test_checkpoint_statements_byte_exact():
@@ -96,6 +115,19 @@ def test_checkpoint_statements_byte_exact():
         f"SELECT seq FROM {CHECKPOINT_TABLE} WHERE tablename=? "
         "ORDER BY id DESC LIMIT 1"
     )
+    # reference lib/sqlite.js:11,138-170: no surrogate key — newest
+    # row by rowid, plus a write timestamp.
+    assert checkpoint_ddl("sqlite") == (
+        f'CREATE TABLE IF NOT EXISTS "{CHECKPOINT_TABLE}" (tablename TEXT, '
+        "seq TEXT, timestamp INTEGER DEFAULT (strftime('%s','now')))"
+    )
+    assert write_checkpoint_sql("sqlite") == (
+        f'INSERT INTO "{CHECKPOINT_TABLE}" (tablename, seq) VALUES (?, ?)'
+    )
+    assert get_checkpoint_sql("sqlite") == (
+        f'SELECT seq FROM "{CHECKPOINT_TABLE}" WHERE tablename = ? '
+        "ORDER BY rowid DESC LIMIT 1"
+    )
 
 
 def test_unknown_dialect_rejected():
@@ -109,7 +141,8 @@ class FakeDBAPI:
     behaviour to round-trip: keyed tables with upsert/delete-by-id
     (both REPLACE INTO and INSERT..ON CONFLICT resolve to 'last write
     per id wins' — exactly why the reference chose them), and an
-    append-only checkpoint table with newest-wins reads."""
+    append-only checkpoint table with newest-wins reads. Quoted
+    identifiers (SQLite) parse like bare ones."""
 
     def __init__(self):
         self.statements: list[tuple[str, tuple]] = []
@@ -119,6 +152,7 @@ class FakeDBAPI:
 
     def execute(self, sql: str, params: tuple = ()):
         self.statements.append((sql, tuple(params)))
+        sql = sql.replace('"', "")
         if sql.startswith("CREATE TABLE IF NOT EXISTS couchwarehouse_check"):
             pass
         elif sql.startswith(("CREATE TABLE IF NOT EXISTS", "DROP TABLE")):
@@ -149,7 +183,7 @@ class FakeDBAPI:
         pass
 
 
-@pytest.mark.parametrize("dialect", ["postgresql", "mysql"])
+@pytest.mark.parametrize("dialect", ["postgresql", "mysql", "sqlite"])
 def test_dialect_sink_round_trip(spark, dialect):
     """Full DialectSink round-trip against the fake server: DDL, a
     batch of upserts including a re-upsert and a delete, then the
@@ -169,6 +203,8 @@ def test_dialect_sink_round_trip(spark, dialect):
     n = sink.insert_bulk("mydb", df, SCHEMA, deleted_col="_del")
     assert n == 4
     assert fake.tables["mydb"] == {"a": ("a", "ann2", 9.5, True)}
+    if dialect == "sqlite":  # reference lib/sqlite.js: booleans bind as 0/1
+        assert type(fake.tables["mydb"]["a"][3]) is int
     sink.write_checkpoint("mydb", "42-seq")
     sink.write_checkpoint("mydb", "43-seq")
     assert sink.read_checkpoint("mydb") == "43-seq"  # newest row wins

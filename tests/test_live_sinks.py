@@ -7,18 +7,19 @@ wire-format files.
 from __future__ import annotations
 
 import json
+import sqlite3
 import threading
 import urllib.parse
 from http.server import BaseHTTPRequestHandler, ThreadingHTTPServer
 
 import pytest
 
-from couchwarehouse_spark.sinks.elasticsearch import push_bulk_http
-from couchwarehouse_spark.sinks.sqlite import (
+from couchwarehouse_spark.sinks.dialects import (
     CHECKPOINT_TABLE,
-    SQLiteSink,
-    sqlite_create_table_sql,
+    DialectSink,
+    create_table_sql,
 )
+from couchwarehouse_spark.sinks.elasticsearch import push_bulk_http
 
 SCHEMA = {"id": "string", "name": "string", "price": "number", "paid": "boolean"}
 
@@ -41,7 +42,7 @@ def _frame(spark, rows):
 
 # -- SQLite ------------------------------------------------------------
 def test_sqlite_ddl_matches_reference_dialect():
-    stmts = sqlite_create_table_sql("mydb", SCHEMA, reset=True)
+    stmts = create_table_sql("sqlite", "mydb", SCHEMA, reset=True)
     assert stmts[0] == 'DROP TABLE IF EXISTS "mydb"'
     assert '"id" TEXT PRIMARY KEY' in stmts[1]
     assert '"price" REAL' in stmts[1]
@@ -49,7 +50,7 @@ def test_sqlite_ddl_matches_reference_dialect():
 
 
 def test_sqlite_replace_into_upsert_and_delete(spark, tmp_path):
-    sink = SQLiteSink(str(tmp_path / "wh.sqlite"))
+    sink = DialectSink(sqlite3.connect(str(tmp_path / "wh.sqlite")), "sqlite")
     sink.create_table("mydb", SCHEMA)
     df1 = _frame(spark, [("a", "ann", 1.5, True, False),
                          ("b", "bob", 2.0, False, False)])
@@ -62,21 +63,21 @@ def test_sqlite_replace_into_upsert_and_delete(spark, tmp_path):
     sink.insert_bulk("mydb", df2, SCHEMA, deleted_col="deleted")
     sink.insert_bulk("mydb", df2, SCHEMA, deleted_col="deleted")  # replay
     rows = dict(
-        (r[0], r) for r in sink.query('SELECT id, name, price FROM "mydb"')
+        (r[0], r) for r in sink.con.execute('SELECT id, name, price FROM "mydb"').fetchall()
     )
     assert set(rows) == {"a", "c"}
     assert rows["a"][1] == "ann2" and rows["a"][2] == 9.0
-    sink.close()
+    sink.con.close()
 
 
 def test_sqlite_checkpoint_roundtrip(tmp_path):
-    sink = SQLiteSink(str(tmp_path / "ck.sqlite"))
+    sink = DialectSink(sqlite3.connect(str(tmp_path / "ck.sqlite")), "sqlite")
     assert sink.read_checkpoint("mydb") is None
     sink.write_checkpoint("mydb", "42-abc")
     sink.write_checkpoint("mydb", "99-zzz")
     assert sink.read_checkpoint("mydb") == "99-zzz"
-    assert sink.query(f'SELECT count(*) FROM "{CHECKPOINT_TABLE}"')[0][0] == 2
-    sink.close()
+    assert sink.con.execute(f'SELECT count(*) FROM "{CHECKPOINT_TABLE}"').fetchall()[0][0] == 2
+    sink.con.close()
 
 
 def test_sqlite_end_to_end_from_warehouse_feed(spark, tmp_path):
@@ -99,11 +100,12 @@ def test_sqlite_end_to_end_from_warehouse_feed(spark, tmp_path):
     schema = {"id": "string", **{
         c: "string" for c in state.columns if c != "id"
     }}
-    sink = SQLiteSink(str(tmp_path / "out.sqlite"))
+    sink = DialectSink(sqlite3.connect(str(tmp_path / "out.sqlite")), "sqlite")
     sink.create_table("sldb", schema)
     sink.insert_bulk("sldb", state, schema)
-    assert sink.query('SELECT count(*) FROM "sldb"')[0][0] == state.count() == 9
-    sink.close()
+    [(n,)] = sink.con.execute('SELECT count(*) FROM "sldb"').fetchall()
+    assert n == state.count() == 9
+    sink.con.close()
 
 
 # -- Elasticsearch _bulk over HTTP ------------------------------------
@@ -255,7 +257,7 @@ def test_cdc_payload_incremental_sqlite_follow(spark, tmp_path):
         "SELECT * FROM VALUES ('a', 2, 'ann2'), ('c', 1, 'cal'), ('d', 1, 'dee') "
         "AS t(id, _cw_seq, name)"
     )
-    sink = SQLiteSink(str(tmp_path / "follow.sqlite"))
+    sink = DialectSink(sqlite3.connect(str(tmp_path / "follow.sqlite")), "sqlite")
     schema = {"id": "string", "name": "string"}
     sink.create_table("t", schema)
     sink.insert_bulk("t", old, schema)  # initial full export
@@ -264,9 +266,9 @@ def test_cdc_payload_incremental_sqlite_follow(spark, tmp_path):
     payload = cdc_payload(diff, new)
     n = sink.insert_bulk("t", payload, schema, deleted_col=DELETED_COL)
     assert n == 3  # a updated, b deleted, d inserted — c never shipped
-    rows = dict(sink.query('SELECT id, name FROM "t"'))
+    rows = dict(sink.con.execute('SELECT id, name FROM "t"').fetchall())
     assert rows == {"a": "ann2", "c": "cal", "d": "dee"}
-    sink.close()
+    sink.con.close()
 
 
 def test_sqlite_follower_mirrors_warehouse_per_batch(spark, tmp_path):

@@ -547,11 +547,14 @@ class TestFullOuterStreamJoinBoundary:
         a purchase at EXACTLY the final watermark emits NULL-padded,
         one second past it is held; an unconverted view whose window
         closed emits; open-window rows on both sides are held. This
-        pin is what licenses the `<=` in the entry's oracle."""
+        pin (through ``interval_join_streams``, the entry's operator)
+        is what licenses the `<=` in the entry's oracle."""
         import os
         import shutil
 
         from pyspark.sql import functions as F
+
+        from couchwarehouse_spark.streaming.joins import interval_join_streams
 
         base = str(tmp_path / "fo")
         os.makedirs(f"{base}/v")
@@ -579,28 +582,22 @@ class TestFullOuterStreamJoinBoundary:
                         os.path.join(tmp, f), os.path.join(base, sub, f)
                     )
         schema = "ts timestamp, user_id long"
-        views = (
-            spark.readStream.schema(schema)
-            .parquet(f"{base}/v")
-            .withWatermark("ts", "10 minutes")
-            .select(F.col("user_id").alias("v_user"), F.col("ts").alias("view_ts"))
+        views = spark.readStream.schema(schema).parquet(f"{base}/v").select(
+            F.col("user_id").alias("v_user"), F.col("ts").alias("view_ts")
         )
-        purch = (
-            spark.readStream.schema(schema)
-            .parquet(f"{base}/p")
-            .withWatermark("ts", "10 minutes")
-            .select(
-                F.col("user_id").alias("p_user"),
-                F.col("ts").alias("purchase_ts"),
-            )
+        purch = spark.readStream.schema(schema).parquet(f"{base}/p").select(
+            F.col("user_id").alias("p_user"), F.col("ts").alias("purchase_ts")
         )
-        j = views.join(
+        j = interval_join_streams(
+            views,
             purch,
-            F.expr(
-                "v_user = p_user AND purchase_ts > view_ts "
-                "AND purchase_ts <= view_ts + INTERVAL 1 HOUR"
-            ),
-            "full_outer",
+            key="v_user",
+            right_key="p_user",
+            left_ts="view_ts",
+            right_ts="purchase_ts",
+            watermark="10 minutes",
+            interval="1 hour",
+            how="full_outer",
         )
         q = (
             j.writeStream.format("memory")

@@ -1730,3 +1730,102 @@ def test_fsck_clean_and_corrupted(spark, tmp_path):
     rep2 = wh.fsck().collect()[0]
     assert not rep2["ok"]
     assert rep2["n_missing_files"] == 1
+
+
+def _bucket_files(path: str, b: int = 0) -> dict[str, bytes]:
+    """name -> content for every parquet part in one bucket dir."""
+    import os
+
+    bdir = os.path.join(path, f"_cw_bucket={b}")
+    return {
+        fn: open(os.path.join(bdir, fn), "rb").read()
+        for fn in sorted(os.listdir(bdir))
+        if fn.endswith(".parquet")
+    }
+
+
+def test_merge_keeps_untouched_files_byte_identical(spark, tmp_path):
+    """File-level merge pruning: within an affected bucket, a part
+    file whose id min/max range misses every batch id must survive
+    the merge byte-identical (same name, same bytes) — only
+    intersecting files are rewritten. n_buckets=1 forces every batch
+    into one bucket so the file-level (not bucket-level) pruning is
+    what's under test."""
+    from couchwarehouse_spark.warehouse import Warehouse
+
+    from .fixtures import envelope, person_doc, write_feed
+    import random
+
+    rng = random.Random(43)
+    wh = Warehouse(spark, str(tmp_path / "wh"), "filemerge", n_buckets=1)
+    path = wh._table_path("_default")
+
+    # Batch 1: ids aaa* — lands as the bucket's first file(s).
+    def doc(i, prefix):
+        d = person_doc(i, rng)
+        d["_id"] = f"{prefix}{i:04d}"
+        return d
+
+    feed1 = write_feed(
+        str(tmp_path / "f1"), [envelope(i + 1, doc(i, "aaa")) for i in range(5)]
+    )
+    wh.spool(feed1)
+    gen1 = _bucket_files(path)
+    assert gen1
+
+    # Batch 2: ids zzz* — same bucket, but every aaa-file's id range
+    # misses them: those files must not be rewritten.
+    feed2 = write_feed(
+        str(tmp_path / "f2"), [envelope(i + 6, doc(i, "zzz")) for i in range(5)]
+    )
+    wh.spool(feed2)
+    gen2 = _bucket_files(path)
+    for name, blob in gen1.items():
+        assert gen2[name] == blob, f"{name} was rewritten"
+    assert len(gen2) > len(gen1)  # zzz rows arrived in new file(s)
+    assert wh.table().count() == 10
+
+    # Batch 3: update one zzz id — aaa files still byte-identical,
+    # at least one zzz file rewritten, update visible.
+    upd = doc(2, "zzz")
+    upd["name"] = "updated"
+    feed3 = write_feed(str(tmp_path / "f3"), [envelope(11, upd)])
+    wh.spool(feed3)
+    gen3 = _bucket_files(path)
+    for name, blob in gen1.items():
+        assert gen3[name] == blob, f"{name} was rewritten by batch 3"
+    assert wh.table().count() == 10
+    assert (
+        wh.table().filter("id = 'zzz0002'").collect()[0]["name"] == "updated"
+    )
+    # And a delete: aaa0001 goes away; every OTHER aaa row intact.
+    feed4 = write_feed(
+        str(tmp_path / "f4"),
+        [envelope(12, None, doc_id="aaa0001", deleted=True)],
+    )
+    wh.spool(feed4)
+    assert wh.table().count() == 9
+    assert wh.table().filter("id like 'aaa%'").count() == 4
+
+
+def test_spool_survives_corrupt_feed_lines(spark, tmp_path):
+    """PERMISSIVE JSON parsing turns malformed feed lines into all-null
+    envelopes; the ingest filter must drop them explicitly so they
+    never reach schema discovery or the merge — the good changes on
+    the same page still land and the checkpoint advances to their max
+    seq."""
+    feed = tmp_path / "feed"
+    feed.mkdir()
+    (feed / "page1.jsonl").write_text(
+        '{"seq":"1-a","id":"doc1","doc":{"_id":"doc1","_rev":"1-x","name":"alice"}}\n'
+        "THIS IS NOT JSON {{{\n"
+        '{"seq":"2-a","id":"doc2","doc":{"_id":"doc2","_rev":"1-x","name":"bob"}}\n'
+        '{"seq":"3-a"\n'  # truncated envelope
+    )
+    from couchwarehouse_spark.warehouse import Warehouse
+
+    wh = Warehouse(spark, str(tmp_path / "wh"), "robustdb", reset=True)
+    last = wh.spool(str(feed))
+    assert last == "2-a"
+    rows = {r["id"]: r["name"] for r in wh.table().collect()}
+    assert rows == {"doc1": "alice", "doc2": "bob"}
