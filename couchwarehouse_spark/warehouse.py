@@ -15,6 +15,14 @@ Streaming ``foreachBatch`` (streaming.ingest), which is the
 micro-batch analog of the reference's 'batch' event loop
 (reference index.js:105-125).
 
+In split mode every doc type is its own table with its own manifest
+log, so ``_process_batch`` merges a batch's types at once on a thread
+pool (as wide as the session's default parallelism, at most one worker
+per type). Followers, ``auto_vacuum``, the schema-registry save and the
+batch's unpersist stay on the calling thread and run after every merge
+has finished; a failed type leaves the others committed, and the
+unadvanced checkpoint replays the batch idempotently.
+
 Scale: tables are hash-bucket-partitioned on ``id`` (parquet
 ``_cw_bucket=K`` directories); a batch rewrites ONLY the buckets its
 ids hash into — per-batch I/O is proportional to the batch, not the
@@ -41,10 +49,12 @@ import json
 import os
 import shutil
 from collections.abc import Callable, Mapping
+from concurrent.futures import ThreadPoolExecutor
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
+from pyspark.util import inheritable_thread_target
 
 from couchwarehouse_spark.functions.mango import compile_selector
 from couchwarehouse_spark.operators.document import (
@@ -75,8 +85,9 @@ class ConcurrentCommitError(RuntimeError):
 class ConstraintViolationError(RuntimeError):
     """A batch contained rows violating a CHECK constraint while the
     warehouse runs in the default ``constraint_mode='error'`` — the
-    batch is rejected whole (Delta CHECK semantics: the write fails,
-    the table never holds a violating row)."""
+    batch's rows for that type table are rejected whole (Delta CHECK
+    semantics: the write fails, the table never holds a violating
+    row); other type tables of a split batch may still commit."""
 
 
 def _parquet_id_range(fp: str) -> tuple[str, str] | None:
@@ -271,8 +282,12 @@ class Warehouse:
                 self.n_buckets = int(meta["n_buckets"])
 
     def _save_schemas(self) -> None:
+        """Write the registry atomically (temp file + rename): a crash
+        mid-write leaves the previous complete file, never a torn one
+        that ``_load_schemas`` could not parse."""
         os.makedirs(self.warehouse_dir, exist_ok=True)
-        with open(self._schema_path, "w") as f:
+        tmp = self._schema_path + f".tmp.{os.getpid()}"
+        with open(tmp, "w") as f:
             json.dump(
                 {
                     "__meta__": {
@@ -285,6 +300,7 @@ class Warehouse:
                 f,
                 indent=1,
             )
+        os.replace(tmp, self._schema_path)
 
     # -- naming --------------------------------------------------------
 
@@ -338,7 +354,19 @@ class Warehouse:
 
     def _process_batch(self, env: DataFrame) -> str | None:
         """Conform + merge one envelope batch (the 'batch' event body,
-        reference index.js:105-125). Returns the batch's max seq token."""
+        reference index.js:105-125). Returns the batch's max seq token.
+
+        The batch's doc types (plus every type table when it holds
+        tombstones) merge concurrently, one ``_merge_type`` per type on
+        a pool of ``min(types, defaultParallelism)`` workers: each type
+        is an independent commit unit. The calling thread waits for
+        every merge, then re-raises the first failure in sorted type
+        order — types that committed stay committed, and the caller's
+        checkpoint is not advanced, so a replay converges (the merge is
+        idempotent by seq). Only when every type committed does it run
+        the followers (sorted type order, conformed frames still
+        persisted) and ``auto_vacuum``. The schema registry is saved
+        and the cached frames released in every case."""
         env = filter_design_docs(env)
         env = split_envelopes(env, self.split)
         # One JSON parse, many consumers: this batch is read by the
@@ -376,21 +404,51 @@ class Warehouse:
             # Fan out to every DOC-TYPE table — but never to clone()
             # branches, whose lineage is frozen at clone time.
             types |= set(self.schemas.keys()) - self.clone_types
+        order = sorted(types)
+        merged: dict[str, tuple[DataFrame, DataFrame]] = {}
         try:
-            for doc_type in sorted(types):
-                self._merge_type(live, tombstones, doc_type)
-                if self.auto_vacuum is not None:
-                    # Default grace, NOT zero: redundant HA ingestors
-                    # (tests/test_multiprocess_race.py) may race this
-                    # table, and a zero-grace vacuum here could delete
-                    # a peer's published-but-not-yet-committed files.
-                    # Expired MANIFESTS still drop immediately (version
-                    # retention is not age-guarded), so auto_vacuum
-                    # keeps bounding the log; superseded data files
-                    # are reclaimed once older than the grace.
+            # A merge is a chain of small jobs with driver gaps between
+            # them; the pool fills one type's gaps with another type's
+            # jobs. The wrapper hands each worker the caller's local
+            # properties (job group, streaming query properties).
+            width = max(1, min(len(order), self.spark.sparkContext.defaultParallelism))
+            merge = inheritable_thread_target(self.spark)(
+                lambda doc_type: self._merge_type(live, tombstones, doc_type)
+            )
+            with ThreadPoolExecutor(max_workers=width) as pool:
+                futures = {t: pool.submit(merge, t) for t in order}
+            # Leaving the pool waited for every merge; keep what the
+            # committed ones hold, then raise the first failure in
+            # type order.
+            merged.update(
+                (t, f.result()) for t, f in futures.items() if f.exception() is None
+            )
+            for f in futures.values():
+                f.result()
+            # Followers see the exact conformed frame each merge applied
+            # (still persisted), so secondary targets can never drift
+            # from the warehouse's own semantics.
+            for doc_type in order:
+                for follower in self.followers:
+                    follower(self, doc_type, merged[doc_type][1], tombstones)
+            if self.auto_vacuum is not None:
+                # Default grace, NOT zero: redundant HA ingestors
+                # (tests/test_multiprocess_race.py) may race this
+                # table, and a zero-grace vacuum here could delete
+                # a peer's published-but-not-yet-committed files.
+                # Expired MANIFESTS still drop immediately (version
+                # retention is not age-guarded), so auto_vacuum
+                # keeps bounding the log; superseded data files
+                # are reclaimed once older than the grace.
+                for doc_type in order:
                     self.vacuum(doc_type, retain_versions=self.auto_vacuum)
-            self._save_schemas()
         finally:
+            for held, _ in merged.values():
+                held.unpersist(blocking=False)
+            # Saved even when a type failed: a type that committed has
+            # its frozen schema recorded, so a reopen cannot re-freeze
+            # it from a later batch's first doc and drop columns.
+            self._save_schemas()
             env.unpersist()
         return last_seq
 
@@ -816,7 +874,14 @@ class Warehouse:
             rows, "version int, op string, ts double, n_files int"
         )
 
-    def _merge_type(self, live: DataFrame, tombstones: DataFrame, doc_type: str) -> None:
+    def _merge_type(
+        self, live: DataFrame, tombstones: DataFrame, doc_type: str
+    ) -> tuple[DataFrame, DataFrame]:
+        """Conform, check and commit one doc type's share of a batch.
+        Returns (the persisted conformed frame, the frame the merge
+        applied — the same frame, or its constraint-passing rows in
+        quarantine mode); the caller hands the second to followers and
+        then unpersists the first."""
         sub = live.filter(F.col("_cw_type") == doc_type).select(SEQ_COL, "doc.*")
         flat = flatten_frame(sub)
         if self.transform is not None:
@@ -831,13 +896,13 @@ class Warehouse:
         struct = schema_to_struct(self.schemas[doc_type])
 
         # Persisted: the incremental lane reads this frame twice (the
-        # affected-bucket probe and the merge write) — without a persist
+        # affected-file probe and the merge write) — without a persist
         # the flatten/transform/selector/conform pipeline would run
-        # twice per micro-batch. Released in the finally below so a
+        # twice per micro-batch. Released here if the merge fails, so a
         # failed write cannot leak the cached frame for the session.
-        conformed = conform_frame(flat, struct, keep=[SEQ_COL]).persist()
+        held = conform_frame(flat, struct, keep=[SEQ_COL]).persist()
         try:
-            conformed = self._enforce_constraints(conformed, doc_type)
+            applied = self._enforce_constraints(held, doc_type)
             # Opt-in optimistic-concurrency retry (merge_retries > 0):
             # a losing HA ingestor re-merges the SAME conformed batch
             # against the winner's new head — _merge_conformed re-reads
@@ -848,19 +913,16 @@ class Warehouse:
             # the default merge_retries=0 the conflict stays LOUD.
             for attempt in range(self.merge_retries + 1):
                 try:
-                    self._merge_conformed(conformed, tombstones, doc_type)
+                    self._merge_conformed(applied, tombstones, doc_type)
                     break
                 except ConcurrentCommitError:
                     if attempt == self.merge_retries:
                         raise
-            # Followers see the exact conformed frame the merge applied
-            # (still persisted), so secondary targets can never drift
-            # from the warehouse's own semantics.
-            for follower in self.followers:
-                follower(self, doc_type, conformed, tombstones)
-        finally:
-            conformed.unpersist(blocking=False)
-        self.register_view(doc_type)
+            self.register_view(doc_type)
+        except BaseException:
+            held.unpersist(blocking=False)
+            raise
+        return held, applied
 
     def _state_max_seq(self, path: str, manifest: dict) -> int:
         """max(_cw_seq) over one manifest's snapshot WITHOUT a Spark
@@ -908,66 +970,6 @@ class Warehouse:
             mx = max(mx, int(row["m"] or 0))
         return mx
 
-    def _prune_bucket_files(
-        self,
-        bucket_files: dict[int, list[str]],
-        conformed: DataFrame,
-        tombstones: DataFrame,
-        stats_by_path: dict[str, list | None] | None = None,
-    ) -> tuple[list[str], dict[int, list[str]]]:
-        """File-level merge pruning WITHIN affected buckets: a part
-        file whose ``id`` min/max range contains no batch id needs no
-        rewrite — its rows can't compete in the latest-wins window
-        (state holds exactly one row per id, so a touched id's single
-        copy always lives in a file whose range covers it).
-        ``bucket_files`` is the current manifest's view of the affected
-        buckets (bucket id → absolute part-file paths);
-        ``stats_by_path`` is the manifest's recorded id ranges, so the
-        common case never touches a parquet footer here (stats were
-        read once at commit — Delta's stats-in-log). Returns (files to
-        merge, per-bucket untouched files the next manifest carries
-        forward by reference). The range-vs-batch-id check is a
-        broadcast semi join, not a collect of ids. Files without id
-        statistics are conservatively merged."""
-        stats_by_path = stats_by_path or {}
-        metas: list[tuple[int, str, str, str]] = []
-        read_files: list[str] = []
-        for b, files in bucket_files.items():
-            for fp in files:
-                rng = stats_by_path.get(fp)
-                if rng is None:
-                    # Pre-stats manifest (or absent footer stats at
-                    # commit): one fallback footer read.
-                    rng = _parquet_id_range(fp)
-                if rng is None:
-                    read_files.append(fp)
-                else:
-                    metas.append((b, fp, rng[0], rng[1]))
-        hit: set[str] = set()
-        if metas:
-            meta_df = self._literal_frame(
-                metas, ["b", "file", "min_id", "max_id"]
-            )
-            touched = conformed.select("id").unionByName(tombstones.select("id"))
-            hit = {
-                r["file"]
-                for r in meta_df.join(
-                    touched,
-                    (F.col("id") >= F.col("min_id"))
-                    & (F.col("id") <= F.col("max_id")),
-                    "left_semi",
-                )
-                .select("file")
-                .collect()
-            }
-        untouched: dict[int, list[str]] = {}
-        for b, fp, _, _ in metas:
-            if fp in hit:
-                read_files.append(fp)
-            else:
-                untouched.setdefault(b, []).append(fp)
-        return read_files, untouched
-
     _LITERAL_CHUNK = 500  # structs per explode()d array literal
     _LITERAL_MAX = 20_000  # above this, fall back to createDataFrame
 
@@ -991,7 +993,13 @@ class Warehouse:
             arr = F.array(
                 *[
                     F.struct(
-                        *[F.lit(v).alias(n) for v, n in zip(row, names)]
+                        *[
+                            # A None (a file without id stats) is a
+                            # typed string NULL, not a NullType field.
+                            (F.lit(v) if v is not None else F.lit(None).cast("string"))
+                            .alias(n)
+                            for v, n in zip(row, names)
+                        ]
                     )
                     for row in rows[i : i + self._LITERAL_CHUNK]
                 ]
@@ -1071,7 +1079,7 @@ class Warehouse:
         n_cur = self._manifest_buckets_n(manifest)
         bucket_of = lambda c: self._bucket_of(c, n_cur)  # noqa: E731
         state = None
-        affected: list[int] | None = None
+        affected: set[int] | None = None
         untouched: dict[int, list[str]] = {}
         prev_buckets: dict[int, list[str]] = {}
         prev_stats: dict[int, dict[str, list | None]] = {}
@@ -1082,34 +1090,50 @@ class Warehouse:
             }
             # Incremental lane: only buckets this batch's ids (or
             # tombstone ids) hash into are considered — and within
-            # those, only part files whose id range intersects the
-            # batch are read and rewritten (_prune_bucket_files);
-            # every other file carries forward BY REFERENCE in the
-            # next manifest — zero I/O, not even a rename. Bucket ids
-            # are ≤ n_buckets scalars; collecting them is not data.
-            affected = sorted(
-                r["b"]
-                for r in conformed.select(bucket_of("id").alias("b"))
-                .unionByName(tombstones.select(bucket_of("id").alias("b")))
-                .distinct()
-                .collect()
+            # those, only part files whose id range holds a batch id
+            # of that bucket are read and rewritten (state holds one
+            # row per id, in a file of the id's bucket whose range
+            # covers it); every other file carries forward BY
+            # REFERENCE in the next manifest — zero I/O, not even a
+            # rename. One probe answers both: each batch id, with its
+            # bucket, left-joined to the manifest's per-file id ranges
+            # (Delta's stats-in-log; no footer is opened). Its distinct
+            # (bucket, file) pairs are the affected buckets and the hit
+            # files — bucket ids and file names, not data. A file
+            # without recorded stats matches every id of its bucket, so
+            # it is read whenever its bucket is touched.
+            metas = []
+            for b, files in prev_buckets.items():
+                for fn in files:
+                    lo, hi = prev_stats.get(b, {}).get(fn) or (None, None)
+                    metas.append((b, os.path.join(path, f"_cw_bucket={b}", fn), lo, hi))
+            batch_ids = (
+                conformed.select("id")
+                .unionByName(tombstones.select("id"))
+                .select(bucket_of("id").alias("b"), "id")
             )
-            aff_files = {
-                b: [
-                    os.path.join(path, f"_cw_bucket={b}", fn)
-                    for fn in prev_buckets.get(b, [])
-                ]
-                for b in affected
-                if prev_buckets.get(b)
-            }
-            stats_by_path = {
-                os.path.join(path, f"_cw_bucket={b}", fn): rng
-                for b, per in prev_stats.items()
-                for fn, rng in per.items()
-            }
-            read_files, untouched = self._prune_bucket_files(
-                aff_files, conformed, tombstones, stats_by_path
-            )
+            if metas:
+                meta_df = self._literal_frame(metas, ["fb", "file", "min_id", "max_id"])
+                probe = batch_ids.join(
+                    F.broadcast(meta_df),
+                    (F.col("b") == F.col("fb"))
+                    & (
+                        F.col("min_id").isNull()
+                        | F.col("id").between(F.col("min_id"), F.col("max_id"))
+                    ),
+                    "left",
+                )
+            else:
+                probe = batch_ids.withColumn("file", F.lit(None).cast("string"))
+            pairs = probe.select("b", "file").distinct().collect()
+            affected = {r["b"] for r in pairs}
+            hit = {r["file"] for r in pairs}
+            read_files = []
+            for b, fp, _, _ in metas:
+                if fp in hit:
+                    read_files.append(fp)
+                elif b in affected:
+                    untouched.setdefault(b, []).append(fp)
             if read_files:
                 # Explicit schema (CURRENT frozen schema + seq): under
                 # evolution the affected files may predate a column —
@@ -1155,12 +1179,11 @@ class Warehouse:
         if affected is None:
             next_buckets, next_stats = new_buckets, new_stats
         else:
-            aff = set(affected)
             next_buckets = {
-                b: fs for b, fs in prev_buckets.items() if b not in aff
+                b: fs for b, fs in prev_buckets.items() if b not in affected
             }
             next_stats = {
-                b: per for b, per in prev_stats.items() if b not in aff
+                b: per for b, per in prev_stats.items() if b not in affected
             }
             for b in affected:
                 carried = [os.path.basename(fp) for fp in untouched.get(b, [])]
@@ -1404,15 +1427,15 @@ class Warehouse:
         elif self.evolve_schema:
             self._evolve_schema(flat, doc_type)
         struct = schema_to_struct(self.schemas[doc_type])
-        conformed = conform_frame(flat, struct, keep=[SEQ_COL]).persist()
+        held = conform_frame(flat, struct, keep=[SEQ_COL]).persist()
         try:
-            conformed = self._enforce_constraints(conformed, doc_type)
+            conformed = self._enforce_constraints(held, doc_type)
             n = conformed.count()
             self._merge_conformed(conformed, tombstones, doc_type)
             for follower in self.followers:
                 follower(self, doc_type, conformed, tombstones)
         finally:
-            conformed.unpersist(blocking=False)
+            held.unpersist(blocking=False)
         self._save_schemas()
         self.register_view(doc_type)
         return n + n_del
@@ -1604,8 +1627,11 @@ class Warehouse:
         """Register a CHECK constraint (Delta ``ALTER TABLE ... ADD
         CONSTRAINT ... CHECK (expr)``): every future batch merged into
         ``doc_type`` must satisfy ``expr`` row-wise (NULL passes —
-        SQL-standard CHECK). Mode 'error' rejects the whole batch with
-        ConstraintViolationError BEFORE anything is written; mode
+        SQL-standard CHECK). Mode 'error' rejects the batch's rows for
+        ``doc_type`` with ConstraintViolationError before anything is
+        written to that table — rejection is per type table: in split
+        mode the batch's other types still commit, and the unadvanced
+        checkpoint replays the batch once the cause is fixed; mode
         'quarantine' diverts offenders to ``_quarantine/<type>/`` as
         parquet and merges the rest — the dead-letter pattern for
         unattended monitors. Existing rows are NOT re-validated (also

@@ -1829,3 +1829,290 @@ def test_spool_survives_corrupt_feed_lines(spark, tmp_path):
     assert last == "2-a"
     rows = {r["id"]: r["name"] for r in wh.table().collect()}
     assert rows == {"doc1": "alice", "doc2": "bob"}
+
+
+# -- split mode: a batch's per-type merges run at once ------------------
+
+
+def _typed_doc(doc_type: str, i: int, v: int, **extra) -> dict:
+    return {"_id": f"{doc_type}{i:03d}", "_rev": f"{v}-x", "type": doc_type,
+            "v": v, "note": f"{doc_type}-{i}", **extra}
+
+
+def _split_replay(rng: random.Random, types: list[str]) -> list[list[dict]]:
+    """Three seq-ordered pages of a split feed. Page 1 inserts docs of
+    every type and deletes two of them; page 2 amends, inserts and
+    deletes at random, deletes a doc and re-creates it within the page,
+    and re-creates a doc page 1 deleted; page 3 holds only tombstones,
+    so it reaches every type table through the fan-out alone."""
+    seq = 0
+    live: dict[str, str] = {}  # id -> type
+    gone: dict[str, str] = {}  # deleted id -> type
+    pages: list[list[dict]] = []
+
+    def put(doc_type, i, page):
+        nonlocal seq
+        seq += 1
+        doc = _typed_doc(doc_type, i, seq)
+        live[doc["_id"]] = doc_type
+        gone.pop(doc["_id"], None)
+        page.append(envelope(seq, doc))
+
+    def delete(doc_id, page):
+        nonlocal seq
+        seq += 1
+        gone[doc_id] = live.pop(doc_id)
+        page.append(envelope(seq, None, doc_id=doc_id, deleted=True))
+
+    def reput(doc_id, page):
+        put(live.get(doc_id) or gone[doc_id], int(doc_id[-3:]), page)
+
+    page: list[dict] = []
+    for i in range(24):
+        put(types[i % len(types)], i, page)
+    for doc_id in rng.sample(sorted(live), 2):
+        delete(doc_id, page)
+    pages.append(page)
+    page = []
+    reput(rng.choice(sorted(gone)), page)
+    for _ in range(16):
+        doc_id = rng.choice(sorted(live))
+        if rng.random() < 0.3:
+            delete(doc_id, page)
+        else:
+            reput(doc_id, page)
+    put(types[0], 100, page)
+    doc_id = rng.choice(sorted(live))
+    delete(doc_id, page)
+    reput(doc_id, page)
+    pages.append(page)
+    page = []
+    for doc_id in rng.sample(sorted(live), 4):
+        delete(doc_id, page)
+    pages.append(page)
+    return pages
+
+
+def _replay_oracle(pages: list[list[dict]], types: list[str]) -> dict:
+    """Per-type ``{id: v}`` a dict latest-wins replay of the pages
+    predicts; a tombstone removes the id whatever its type."""
+    live: dict[str, dict] = {}
+    for page in pages:
+        for env in page:
+            if env.get("deleted"):
+                live.pop(env["id"], None)
+            else:
+                live[env["id"]] = env["doc"]
+    return {
+        t: {i: float(d["v"]) for i, d in live.items() if d["type"] == t} for t in types
+    }
+
+
+def _count_concurrent_merges(wh) -> dict:
+    """Wrap ``wh._merge_type`` to record the most merges running at once."""
+    import threading
+
+    lock = threading.Lock()
+    seen = {"active": 0, "peak": 0, "calls": 0}
+    inner = wh._merge_type
+
+    def merge_type(*args):
+        with lock:
+            seen["active"] += 1
+            seen["calls"] += 1
+            seen["peak"] = max(seen["peak"], seen["active"])
+        try:
+            return inner(*args)
+        finally:
+            with lock:
+                seen["active"] -= 1
+
+    wh._merge_type = merge_type
+    return seen
+
+
+def _type_tables(wh, types) -> dict:
+    return {t: {r["id"]: r["v"] for r in wh.table(t).collect()} for t in types}
+
+
+def test_split_replay_matches_oracle_spool_and_stream(spark, tmp_path):
+    """A seeded split-mode replay through both batch entry points —
+    ``spool()`` page by page, and ``monitor_warehouse`` draining the
+    same pages one micro-batch each — ends in exactly the per-type
+    tables a dict latest-wins replay predicts."""
+    import os
+
+    from couchwarehouse_spark.streaming.ingest import monitor_warehouse
+
+    types = ["alpha", "beta", "gamma"]
+    pages = _split_replay(random.Random(2024), types)
+    expected = _replay_oracle(pages, types)
+
+    wh = Warehouse(spark, str(tmp_path / "wh_spool"), "splitdb", split="type", n_buckets=4)
+    seen = _count_concurrent_merges(wh)
+    for n, page in enumerate(pages):
+        wh.spool(write_feed(str(tmp_path / f"page{n}.jsonl"), page))
+    assert _type_tables(wh, types) == expected
+    assert seen["calls"] == len(pages) * len(types)  # every page reaches every type
+
+    feed_dir = tmp_path / "landing"
+    feed_dir.mkdir()
+    for n, page in enumerate(pages):
+        fp = write_feed(str(feed_dir / f"page{n}.json"), page)
+        os.utime(fp, (1_700_000_000 + n, 1_700_000_000 + n))
+    ws = Warehouse(spark, str(tmp_path / "wh_stream"), "splitdb", split="type", n_buckets=4)
+    q = monitor_warehouse(ws, str(feed_dir), str(tmp_path / "ckpt"),
+                          available_now=True, max_files_per_trigger=1)
+    assert q.awaitTermination(120)
+    assert _type_tables(ws, types) == expected
+    assert ws.checkpoints.read("splitdb") == pages[-1][-1]["seq"]
+
+
+def test_split_merge_pool_width_is_capped_by_parallelism(spark, tmp_path):
+    """A batch with more doc types than the session's default
+    parallelism merges them all, never more at once than that, and
+    no worker's frozen schema is lost (switch interval shortened so
+    the workers interleave finely)."""
+    import sys
+
+    width = spark.sparkContext.defaultParallelism
+    types = [f"t{k:02d}" for k in range(width + 2)]
+    page = [envelope(k + 1, _typed_doc(t, k, k + 1)) for k, t in enumerate(types)]
+    wh_dir = str(tmp_path / "wh")
+    wh = Warehouse(spark, wh_dir, "widedb", split="type", n_buckets=2)
+    seen = _count_concurrent_merges(wh)
+    interval = sys.getswitchinterval()
+    sys.setswitchinterval(1e-5)
+    try:
+        wh.spool(write_feed(str(tmp_path / "f.jsonl"), page))
+    finally:
+        sys.setswitchinterval(interval)
+    assert seen["calls"] == len(types)
+    assert 1 < seen["peak"] <= width
+    reopened = Warehouse(spark, wh_dir, "widedb", split="type", n_buckets=2)
+    assert sorted(reopened.schemas) == types
+    assert _type_tables(reopened, types) == {
+        t: {f"{t}{k:03d}": float(k + 1)} for k, t in enumerate(types)
+    }
+
+
+def test_followers_run_on_caller_in_type_order_after_all_commits(spark, tmp_path):
+    """Followers are called on the calling thread, in sorted type
+    order, once every type of the batch has committed, with the
+    conformed frame still persisted; and ``sqlite_follower`` over a
+    split feed mirrors every type table row for row."""
+    import sqlite3
+    import threading
+
+    from pyspark import StorageLevel
+
+    from couchwarehouse_spark.sinks.sqlite import sqlite_follower
+
+    types = ["alpha", "beta", "gamma"]
+    pages = _split_replay(random.Random(7), types)
+    calls = []
+
+    def recording(wh, doc_type, conformed, tombstones):
+        versions = {t: wh._load_manifest(wh._table_path(t))["version"] for t in types}
+        calls.append((threading.get_ident(), doc_type, versions,
+                      conformed.storageLevel != StorageLevel.NONE))
+
+    mirror = str(tmp_path / "mirror.sqlite")
+    wh = Warehouse(spark, str(tmp_path / "wh"), "foldb", split="type", n_buckets=4,
+                   followers=[recording, sqlite_follower(mirror)])
+    for n, page in enumerate(pages[:2]):
+        wh.spool(write_feed(str(tmp_path / f"page{n}.jsonl"), page))
+
+    me = threading.get_ident()
+    for n, batch in enumerate([calls[:3], calls[3:]]):
+        assert [c[1] for c in batch] == types
+        for thread, _, versions, persisted in batch:
+            assert thread == me
+            assert versions == {t: n + 1 for t in types}
+            assert persisted
+    assert len(calls) == 6
+
+    con = sqlite3.connect(mirror)
+    try:
+        for t, rows in _type_tables(wh, types).items():
+            table = wh.table_name(t)
+            assert dict(con.execute(f'SELECT id, v FROM "{table}"')) == rows
+    finally:
+        con.close()
+
+
+def test_failed_type_merge_propagates_and_replay_converges(spark, tmp_path):
+    """When one type's merge raises, the error leaves ``spool()`` and
+    the stream query, and the checkpoint does not advance; the batch's
+    other types may have committed. Replaying the batch after the
+    cause is fixed (here: the constraint dropped) converges to the
+    oracle, because the merge is idempotent by seq."""
+    import os
+
+    import pytest
+
+    from couchwarehouse_spark.streaming.ingest import monitor_warehouse
+    from couchwarehouse_spark.warehouse import ConstraintViolationError
+
+    types = ["alpha", "beta", "gamma"]
+    page = _split_replay(random.Random(99), types)[0]
+    assert page[1]["doc"]["type"] == "beta"
+    page[1] = envelope(int(page[1]["seq"].split("-")[0]), dict(page[1]["doc"], v=-1))
+    expected = _replay_oracle([page], types)
+
+    wh = Warehouse(spark, str(tmp_path / "wh"), "faildb", split="type", n_buckets=4)
+    wh.add_constraint("v_positive", "v > 0", doc_type="beta")
+    feed = write_feed(str(tmp_path / "page.jsonl"), page)
+    with pytest.raises(ConstraintViolationError):
+        wh.spool(feed)
+    assert wh.checkpoints.read("faildb") is None
+    committed = {t for t in types if wh._load_manifest(wh._table_path(t))}
+    assert committed == {"alpha", "gamma"}  # beta's failure did not stop them
+    wh.drop_constraint("v_positive", doc_type="beta")
+    assert wh.spool(feed) == page[-1]["seq"]
+    assert _type_tables(wh, types) == expected
+
+    feed_dir = tmp_path / "landing"
+    feed_dir.mkdir()
+    write_feed(str(feed_dir / "page.json"), page)
+    ws = Warehouse(spark, str(tmp_path / "ws"), "faildb", split="type", n_buckets=4)
+    ws.add_constraint("v_positive", "v > 0", doc_type="beta")
+    ckpt = str(tmp_path / "ckpt")
+    q = monitor_warehouse(ws, str(feed_dir), ckpt, available_now=True)
+    with pytest.raises(Exception, match="v_positive"):
+        q.awaitTermination(120)
+    assert ws.checkpoints.read("faildb") is None
+    assert not os.listdir(os.path.join(ckpt, "commits"))
+    ws.drop_constraint("v_positive", doc_type="beta")
+    q = monitor_warehouse(ws, str(feed_dir), ckpt, available_now=True)
+    assert q.awaitTermination(120)
+    assert ws.checkpoints.read("faildb") == page[-1]["seq"]
+    assert _type_tables(ws, types) == expected
+
+
+def test_committed_type_schema_survives_failed_sibling(spark, tmp_path):
+    """Type ``alpha`` commits while type ``beta`` of the same batch
+    violates a constraint. ``alpha``'s frozen schema must still be
+    recorded: after a reopen, a batch whose first ``alpha`` doc lacks
+    a field must not re-freeze the schema and drop that column."""
+    import pytest
+
+    from couchwarehouse_spark.warehouse import ConstraintViolationError
+
+    wh_dir = str(tmp_path / "wh")
+    wh = Warehouse(spark, wh_dir, "frozendb", split="type", n_buckets=1)
+    wh.add_constraint("v_positive", "v > 0", doc_type="beta")
+    page = [envelope(1, _typed_doc("alpha", 1, 1, extra_col="kept")),
+            envelope(2, _typed_doc("alpha", 2, 2, extra_col="also")),
+            envelope(3, _typed_doc("beta", 1, -3))]
+    with pytest.raises(ConstraintViolationError):
+        wh.spool(write_feed(str(tmp_path / "f1.jsonl"), page))
+
+    wh = Warehouse(spark, wh_dir, "frozendb", split="type", n_buckets=1)
+    wh.spool(write_feed(str(tmp_path / "f2.jsonl"),
+                        [envelope(4, _typed_doc("alpha", 2, 4))]))
+    table = wh.table("alpha")
+    assert "extra_col" in table.columns
+    assert {r["id"]: r["extra_col"] for r in table.collect()} == {
+        "alpha001": "kept", "alpha002": None,
+    }
